@@ -32,7 +32,7 @@ BUDGET_S = 170
 HEAP = "3g"
 
 END_TO_END = [("setup_s", "s"), ("peak_heap_mb", "MB"), ("p50_ms", "ms"), ("tail_ms", "ms"),
-              ("ops_per_s", "1/s"), ("pass_s", "s"), ("cold_s", "s"), ("fresh_frac", "ratio")]
+              ("ops_per_s", "1/s"), ("cold_s", "s"), ("fresh_frac", "ratio")]
 PER_LAYER = [
     ("tables.resolve_ms", "ms"), ("tables.resolve_jobs", "count"),
     ("operators.construct_ms", "ms"), ("operators.construct_jobs", "count"),
@@ -79,14 +79,16 @@ def spark_jars():
 
 
 def build(digest):
-    """Compile library + benchmark once per source digest; return the
-    runtime classpath."""
-    out = os.path.join(ROOT, os.environ.get("CARGO_TARGET_DIR", ".bench_build"))
-    cp_file = os.path.join(out, f"classpath-{digest}.txt")
+    """Compile library + benchmark into .bench_build/<digest>; return the
+    runtime classpath. Each source digest has its own compiled classes, so
+    runs of different code in one checkout never share them."""
+    out = os.path.join(ROOT, ".bench_build", digest)
+    cp_file = os.path.join(out, "classpath.txt")
     if os.path.exists(cp_file):
         return open(cp_file).read().strip()
     env = dict(os.environ, COURSIER_MODE="offline")
-    opts = ["-Dsbt.offline=true", f"-Dperfbench.sparkJars={spark_jars()}"]
+    opts = ["-Dsbt.offline=true", f"-Dperfbench.sparkJars={spark_jars()}",
+            f"-Dperfbench.target={out}"]
     repos = os.path.expanduser("~/.sbt/repositories")
     if os.path.exists(repos):
         opts += ["-Dsbt.override.build.repos=true", f"-Dsbt.repository.config={repos}"]
@@ -94,10 +96,9 @@ def build(digest):
                         "export Runtime/fullClasspath"],
                        cwd=HERE, env=env, capture_output=True, text=True, timeout=840)
     lines = [l for l in r.stdout.splitlines() if l.startswith("/") and ".jar" in l]
-    if r.returncode != 0 or not lines:
+    if r.returncode != 0 or not lines or not lines[-1].startswith(out + os.sep):
         sys.stderr.write(r.stdout[-4000:] + r.stderr[-4000:])
         fail("build failed", 3)
-    os.makedirs(out, exist_ok=True)
     with open(cp_file, "w") as f:
         f.write(lines[-1])
     return lines[-1]
@@ -136,6 +137,12 @@ def tail(values):
     return 100.0 * (len(s) - 10) / len(s), s[-11]
 
 
+def slowest(passes):
+    """The median over warm passes of each pass's slowest successful key
+    run."""
+    return statistics.median(max(p) for p in passes if p)
+
+
 def per_label(pairs):
     """Per-request rows: sample count and median latency by request."""
     by = {}
@@ -160,17 +167,14 @@ def lookup_metrics(plan, res, work):
             if why:
                 failures.append((json.dumps(plan["distinct"][i]), why))
             elif steady:
-                ok.append((ns, end))
+                ok.append(ns / 1e6)
     rows = per_label([(json.dumps(plan["distinct"][i]), ns / 1e6)
                       for i, ns, h, end, err in lk["cold"] + lk["records"] if not err])
-    # steady-state completions cut into blocks of the stream's block size
-    ends = sorted(e for _, e in ok)
-    marks = [0] + ends[plan["block"] - 1::plan["block"]]
-    blocks = [(b - a) / 1e9 for a, b in zip(marks, marks[1:])]
-    pass_s = statistics.median(blocks)
-    return dict(ops=[ns / 1e6 for ns, _ in ok], failures=failures, rows=rows,
+    pct, tail_ms = tail(ok) if ok else (0.0, 0.0)
+    return dict(ops=ok, failures=failures, rows=rows,
                 attempted=len(lk["cold"]) + len(lk["records"]),
-                ops_per_s=plan["block"] / pass_s, cold_s=lk["cold_s"], pass_s=pass_s)
+                tail_ms=tail_ms, tail_what=f"p{pct:.1f} of {len(ok)} requests",
+                ops_per_s=len(ok) / lk["elapsed_s"], cold_s=lk["cold_s"])
 
 
 def pipeline_metrics(plan, res, work):
@@ -180,10 +184,13 @@ def pipeline_metrics(plan, res, work):
     keys = [q for q in plan["requests"] if q["op"] == "key"]
     checked = {q["key"]: (c, check.check_request(con, q, c, res["oracles"], planted))
                for q, c in zip(keys, pl["check"])}
-    failures, lat, rows = [], [], []
+    failures, lat, rows, by_pass = [], [], [], []
     passes = [("cold", plan["requests"], pl["cold"])] + \
+        [("settle", keys, recs) for recs in pl["settle"]] + \
         [("warm", keys, w["ops"]) for w in pl["warm"]]
     for group, reqs, recs in passes:
+        if group == "warm":
+            by_pass.append([])
         for q, rec in zip(reqs, recs):
             if "err" in rec:
                 why = rec["err"]
@@ -197,12 +204,15 @@ def pipeline_metrics(plan, res, work):
                 continue
             if group == "warm":
                 lat.append(rec["ns"] / 1e6)
+                by_pass[-1].append(rec["ns"] / 1e6)
             rows.append((f"{group} {q.get('key') or q['op']}", rec["ns"] / 1e6))
-    warm_s = [w["ns"] / 1e9 for w in pl["warm"]]
-    pass_s = statistics.median(warm_s)
+    passes_s = [w["ns"] / 1e9 for w in pl["warm"]]
     return dict(ops=lat, failures=failures, rows=per_label(rows),
                 attempted=sum(len(recs) for _, _, recs in passes),
-                ops_per_s=len(keys) / pass_s, cold_s=pl["cold_ns"] / 1e9, pass_s=pass_s)
+                tail_ms=slowest(by_pass) if lat else 0.0,
+                tail_what=f"median over {len(by_pass)} warm passes of the slowest key",
+                ops_per_s=len(keys) / statistics.median(passes_s),
+                cold_s=pl["cold_ns"] / 1e9, passes_s=passes_s)
 
 
 def staleness(plan, res, work):
@@ -265,14 +275,12 @@ def main():
         print(f"perfbench: FAILED {what}: {why[:300]}", file=sys.stderr)
     if not m["ops"]:
         fail("no operation succeeded", 6)
-    pct, tail_v = tail(m["ops"])
     e2e = {
         "setup_s": statistics.median(res["setup_s"]),
         "peak_heap_mb": res["heap"]["peak_after_gc_mb"],
         "p50_ms": statistics.median(m["ops"]),
-        "tail_ms": tail_v,
+        "tail_ms": m["tail_ms"],
         "ops_per_s": m["ops_per_s"],
-        "pass_s": m["pass_s"],
         "cold_s": m["cold_s"],
         "fresh_frac": 1.0 - frac,
     }
@@ -280,10 +288,11 @@ def main():
         "workload": a.workload, "seed": a.seed, "seconds": a.seconds, "trace": a.trace,
         "source_digest": digest, "nproc": res["cores"], "heap_max_mb": res["heap_max_mb"],
         "probe_before": res["probe_before"], "probe_after": res["probe_after"],
-        "setup_s_all": res["setup_s"], "heap": res["heap"], "tail_percentile": pct,
+        "setup_s_all": res["setup_s"], "heap": res["heap"], "tail": m["tail_what"],
         "samples": len(m["ops"]), "attempted": m["attempted"],
         "failed": len(m["failures"]), "failures": failures[:50],
         "stale_frac": frac, "stale_answers": stale, "end_to_end": e2e, "rows": m["rows"],
+        "warm_passes_s": m.get("passes_s"),
     }
     metrics = {k: {"value": e2e[k], "unit": u} for k, u in END_TO_END}
     if a.trace:
@@ -303,7 +312,7 @@ def main():
         with open(os.path.join(out_dir, name + "-spans.jsonl"), "w") as f:
             for s in res["spans"]:
                 f.write(json.dumps(dict(zip(("op", "name", "parent", "start_ms", "end_ms"), s))) + "\n")
-    print(f"perfbench: {a.workload} tail=p{pct:.1f} over {len(m['ops'])} samples, "
+    print(f"perfbench: {a.workload} tail={m['tail_what']}, "
           f"stale={stale}, probes before={res['probe_before']} after={res['probe_after']}",
           file=sys.stderr)
     print(json.dumps({"correct": not failures, "attempted": m["attempted"],

@@ -3,7 +3,7 @@
 per-layer numbers, the tracing overhead and the per-request rows to
 perfbench/results/traced_seed<N>.{json,md}.
 
-    python3 perfbench/trace_report.py --seed 1 --seconds 8
+    python3 perfbench/trace_report.py --seed 1 --seconds 10
 """
 import argparse
 import json
@@ -26,7 +26,7 @@ def run(workload, seed, seconds, trace):
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=8)
+    ap.add_argument("--seconds", type=float, default=10)
     a = ap.parse_args()
     report, md = {}, [f"# Traced run, seed {a.seed}, {a.seconds:g} s per run", ""]
     for w in ("lookup", "pipeline"):
