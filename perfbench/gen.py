@@ -242,6 +242,10 @@ def probe_requests(rng, pools):
 # (ts_mad_anomaly).
 PIPELINE_KEYS = ["dedup_near", "dedup_simhash", "pipe_vocab", "sim_edges_grid",
                  "ts_mad_anomaly"]
+# Each pass after the cold one runs the keys in the next of these seeded
+# orders, so that no one order of the keys (and of the code each
+# generates) decides the pass times of a run.
+N_ORDERS = 200
 # The keys that keep session memos, re-asked by the staleness probe.
 MEMO_KEYS = ["dedup_near", "dedup_simhash", "pipe_vocab"]
 
@@ -262,7 +266,17 @@ def _replacement(rng, work, n):
     _write(rep, os.path.join(work, "replacement", "documents.parquet"))
     _write_json(planted_pairs(toks, cluster, rep.column("doc_id").to_numpy()),
                 os.path.join(work, "replacement", "planted_pairs.json"))
-    return os.path.join(work, "replacement", "documents.parquet")
+    return os.path.join(work, "replacement", "documents.parquet"), rep
+
+
+def _stale_probe(rng, probe, docs, rep):
+    """The staleness probe with its n_chars search pointed at a length
+    that both the data and its replacement contain, so that the search
+    has an answer on each and the two differ whatever the seed. (A length
+    the replacement lacks has an empty answer, which a stale reader can
+    return by chance.)"""
+    both = np.intersect1d(docs.column("n_chars").to_numpy(), rep.column("n_chars").to_numpy())
+    return [dict(q, n_chars=int(rng.choice(both))) if "n_chars" in q else q for q in probe]
 
 
 def generate(workload, seed, work):
@@ -277,22 +291,28 @@ def generate(workload, seed, work):
         docs, _, _ = write_tables(rng, os.path.join(work, "data"), size)
         pools = lookup_pools(rng, docs, size["emb"])
         distinct, stream = lookup_stream(rng, pools, 1000)
+        probe = probe_requests(rng, pools)
+        replacement, rep = _replacement(rng, work, 3 * size["docs"])
         plan.update(data=os.path.join(work, "data"), distinct=distinct, stream=stream,
-                    block=LOOKUP_BLOCK,
-                    probe=probe_requests(rng, pools),
-                    replacement=_replacement(rng, work, 3 * size["docs"]))
+                    block=LOOKUP_BLOCK, probe=_stale_probe(rng, probe, docs, rep),
+                    replacement=replacement)
     elif workload == "pipeline":
         size = SIZES["pipeline"]
         docs, toks, cluster = write_tables(rng, os.path.join(work, "data"), size)
         _write_json(planted_pairs(toks, cluster, docs.column("doc_id").to_numpy()),
                     os.path.join(work, "data", "planted_pairs.json"))
         pools = lookup_pools(rng, docs, size["emb"])
+        requests = probe_requests(rng, pools)
+        probe = probe_requests(rng, pools)
+        replacement, rep = _replacement(rng, work, 3 * size["docs"])
+        orders = _rng(seed, "orders")
         plan.update(data=os.path.join(work, "data"),
-                    requests=probe_requests(rng, pools) +
-                    [{"op": "key", "key": k} for k in PIPELINE_KEYS],
-                    probe=probe_requests(rng, pools) +
+                    requests=requests + [{"op": "key", "key": k} for k in PIPELINE_KEYS],
+                    orders=[orders.permutation(len(PIPELINE_KEYS)).tolist()
+                            for _ in range(N_ORDERS)],
+                    probe=_stale_probe(rng, probe, docs, rep) +
                     [{"op": "key", "key": k} for k in MEMO_KEYS],
-                    replacement=_replacement(rng, work, 3 * size["docs"]))
+                    replacement=replacement)
     else:
         raise ValueError(f"unknown workload {workload}")
     _write_json(plan, os.path.join(work, "plan.json"))

@@ -44,6 +44,10 @@ PER_LAYER = [
     ("exec.spill_bytes", "bytes"), ("exec.skew_max", "ratio"), ("exec.exchanges", "count"),
     ("exec.broadcasts", "count"), ("exec.gc_ms", "ms"), ("exec.result_bytes", "bytes"),
 ]
+# Not attributable to one operation when clients run concurrently: the
+# classes Spark's code generator compiled while measuring (misses in its
+# code cache), per timed operation.
+CODEGEN = ("exec.codegen_classes", "count")
 JDK_OPENS = ["java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
              "java.base/java.io", "java.base/java.net", "java.base/java.nio",
              "java.base/java.util", "java.base/java.util.concurrent",
@@ -137,10 +141,10 @@ def tail(values):
     return 100.0 * (len(s) - 10) / len(s), s[-11]
 
 
-def slowest(passes):
-    """The median over warm passes of each pass's slowest successful key
-    run."""
-    return statistics.median(max(p) for p in passes if p)
+def slowest(by_key):
+    """The slowest key's median warm run: each key's median over the warm
+    passes, then the largest of these."""
+    return max(statistics.median(v) for v in by_key.values())
 
 
 def per_label(pairs):
@@ -174,7 +178,9 @@ def lookup_metrics(plan, res, work):
     return dict(ops=ok, failures=failures, rows=rows,
                 attempted=len(lk["cold"]) + len(lk["records"]),
                 tail_ms=tail_ms, tail_what=f"p{pct:.1f} of {len(ok)} requests",
-                ops_per_s=len(ok) / lk["elapsed_s"], cold_s=lk["cold_s"])
+                ops_per_s=len(ok) / lk["elapsed_s"], cold_s=statistics.median(lk["cold_s"]),
+                cold_all_s=lk["cold_s"],
+                codegen_per_op=lk["codegen_classes"] / max(1, len(lk["records"])))
 
 
 def pipeline_metrics(plan, res, work):
@@ -184,13 +190,11 @@ def pipeline_metrics(plan, res, work):
     keys = [q for q in plan["requests"] if q["op"] == "key"]
     checked = {q["key"]: (c, check.check_request(con, q, c, res["oracles"], planted))
                for q, c in zip(keys, pl["check"])}
-    failures, lat, rows, by_pass = [], [], [], []
+    failures, lat, rows, by_key = [], [], [], {}
     passes = [("cold", plan["requests"], pl["cold"])] + \
-        [("settle", keys, recs) for recs in pl["settle"]] + \
-        [("warm", keys, w["ops"]) for w in pl["warm"]]
+        [("settle", [keys[i] for i in s["order"]], s["ops"]) for s in pl["settle"]] + \
+        [("warm", [keys[i] for i in w["order"]], w["ops"]) for w in pl["warm"]]
     for group, reqs, recs in passes:
-        if group == "warm":
-            by_pass.append([])
         for q, rec in zip(reqs, recs):
             if "err" in rec:
                 why = rec["err"]
@@ -204,15 +208,19 @@ def pipeline_metrics(plan, res, work):
                 continue
             if group == "warm":
                 lat.append(rec["ns"] / 1e6)
-                by_pass[-1].append(rec["ns"] / 1e6)
+                by_key.setdefault(q["key"], []).append(rec["ns"] / 1e6)
             rows.append((f"{group} {q.get('key') or q['op']}", rec["ns"] / 1e6))
     passes_s = [w["ns"] / 1e9 for w in pl["warm"]]
     return dict(ops=lat, failures=failures, rows=per_label(rows),
                 attempted=sum(len(recs) for _, _, recs in passes),
-                tail_ms=slowest(by_pass) if lat else 0.0,
-                tail_what=f"median over {len(by_pass)} warm passes of the slowest key",
+                tail_ms=slowest(by_key) if lat else 0.0,
+                tail_what=f"the slowest key's median over {len(passes_s)} warm passes",
                 ops_per_s=len(keys) / statistics.median(passes_s),
-                cold_s=pl["cold_ns"] / 1e9, passes_s=passes_s)
+                cold_s=pl["cold_ns"] / 1e9, warm_key_ms=by_key,
+                passes=[{"group": g, "s": p["ns"] / 1e9, "jit_ms": p["jit_ms"],
+                         "codegen_classes": p["codegen"]}
+                        for g in ("settle", "warm") for p in pl[g]],
+                codegen_per_op=pl["codegen_classes"] / max(1, len(lat)))
 
 
 def staleness(plan, res, work):
@@ -292,11 +300,14 @@ def main():
         "samples": len(m["ops"]), "attempted": m["attempted"],
         "failed": len(m["failures"]), "failures": failures[:50],
         "stale_frac": frac, "stale_answers": stale, "end_to_end": e2e, "rows": m["rows"],
-        "warm_passes_s": m.get("passes_s"),
+        "cold_s_all": m.get("cold_all_s"), "passes": m.get("passes"),
+        "codegen_classes_per_op": m["codegen_per_op"],
+        "warm_key_ms": m.get("warm_key_ms"),
     }
     metrics = {k: {"value": e2e[k], "unit": u} for k, u in END_TO_END}
     if a.trace:
         metrics = layer_metrics(res["layers"])
+        metrics[CODEGEN[0]] = {"value": m["codegen_per_op"], "unit": CODEGEN[1]}
         detail["per_layer"] = metrics
         detail["per_layer_by_group"] = {
             g: {k: v["value"] for k, v in layer_metrics(

@@ -44,12 +44,12 @@ object Main {
       "workload" -> workload, "cores" -> cores,
       "heap_max_mb" -> Runtime.getRuntime.maxMemory / 1048576.0, "trace" -> traced)
 
-    // Set-up: a fresh session plus a warm-up on a small corpus, five
+    // Set-up: a fresh session plus a warm-up on a small corpus, three
     // times; run.py reports the median. The last session stays up for
     // the measurement.
     val warmFailures = mutable.ArrayBuffer.empty[String]
     var spark: SparkSession = null
-    val setupS = (1 to 5).map { _ =>
+    val setupS = (1 to 3).map { _ =>
       if (spark != null) spark.stop()
       val t0 = System.nanoTime()
       spark = GraftSession.local(cores, "perfbench")
@@ -151,7 +151,7 @@ object Ops {
     fingerprinted(df)(_.write.mode("overwrite").parquet(path))
 
   private def fingerprinted(df: DataFrame)(write: DataFrame => Unit): String = {
-    val obs = new Observation()
+    val obs = Observation("perfbench_fp")
     val h = xxhash64(df.columns.map(c => col(s"`$c`")).toSeq: _*)
     write(df.observe(obs, count(lit(1)).as("n"), bit_xor(h).as("x"),
       sum(pmod(h, lit(1000000007L))).as("s")))
@@ -216,41 +216,60 @@ final class Bench(spark: SparkSession, listener: Option[LayerListener], work: St
 
   private def gcBoundary(): Unit = Heap.fullGc()
 
-  // ---- lookup: the stream's first block from one client on untouched
-  // data (the cold start), then a closed loop of `clients` threads ----
+  // ---- lookup: the stream's first block from one client primes the
+  // data (untimed, checked); then a closed loop of `clients` threads on
+  // it for `seconds`; then the cold start: the first block again, from
+  // one client, on each of three byte-identical copies of the data that
+  // no request has touched yet (run.py reports the median) ----
   def lookup(plan: JsonNode, seconds: Double, clients: Int): Map[String, Any] = {
     val dir = plan.get("data").asText
     val distinct = plan.get("distinct").asScala.toIndexedSeq
     val stream = plan.get("stream").asScala.map(_.asInt).toIndexedSeq
     val block = plan.get("block").asInt
     val answers = new ConcurrentHashMap[Int, Map[String, Any]]()
-    val records = new ConcurrentLinkedQueue[Seq[Any]]()
-    def ask(n: Int, start: Long): Unit = {
+    def ask(at: String, n: Int, start: Long, into: ConcurrentLinkedQueue[Seq[Any]]): Unit = {
       val i = stream(n % stream.length)
       try {
         var df: DataFrame = null
-        val (rows, ns) = timed(dir, distinct(i), "request") { d => df = d; d.collect() }
-        records.add(Seq(i, ns, Ops.hash(rows), System.nanoTime() - start, null))
+        val (rows, ns) = timed(at, distinct(i), "request") { d => df = d; d.collect() }
+        into.add(Seq(i, ns, Ops.hash(rows), System.nanoTime() - start, null))
         if (!answers.containsKey(i)) answers.putIfAbsent(i, Ops.answer(df, rows))
-      } catch { case e: Throwable => records.add(Seq(i, 0L, 0, 0L, err(e))) }
+      } catch { case e: Throwable => into.add(Seq(i, 0L, 0, 0L, err(e))) }
     }
-    val t0 = System.nanoTime()
-    (0 until block).foreach(ask(_, t0))
-    val coldS = (System.nanoTime() - t0) / 1e9
-    val cold = records.size
+    val unclocked = new ConcurrentLinkedQueue[Seq[Any]]()
+    def firstBlock(at: String): Double = {
+      gcBoundary()
+      val t0 = System.nanoTime()
+      (0 until block).foreach(ask(at, _, t0, unclocked))
+      (System.nanoTime() - t0) / 1e9
+    }
+    val copies = (1 to 3).map { k =>
+      val to = new File(s"$work/cold$k")
+      to.mkdirs()
+      new File(dir).listFiles.filter(_.isFile).foreach { f =>
+        Files.copy(f.toPath, new File(to, f.getName).toPath)
+      }
+      to.getPath
+    }
+    firstBlock(dir)
+    gcBoundary()
+    val records = new ConcurrentLinkedQueue[Seq[Any]]()
     val next = new AtomicInteger(block)
+    val codegen0 = Jit.codegen()
     val start = System.nanoTime()
     val deadline = start + (seconds * 1e9).toLong
     val threads = (0 until clients).map { _ =>
-      new Thread(() => while (System.nanoTime() < deadline) ask(next.getAndIncrement(), start))
+      new Thread(() =>
+        while (System.nanoTime() < deadline) ask(dir, next.getAndIncrement(), start, records))
     }
     threads.foreach(_.start())
     threads.foreach(_.join())
     val elapsed = (System.nanoTime() - start) / 1e9
+    val codegen = Jit.codegen() - codegen0
+    val coldS = copies.map(firstBlock)
     gcBoundary()
-    val all = records.asScala.toSeq
-    Map("cold_s" -> coldS, "cold" -> all.take(cold), "elapsed_s" -> elapsed,
-      "records" -> all.drop(cold),
+    Map("cold_s" -> coldS, "cold" -> unclocked.asScala.toSeq, "elapsed_s" -> elapsed,
+      "records" -> records.asScala.toSeq, "codegen_classes" -> codegen,
       "answers" -> answers.asScala.map { case (k, v) => k.toString -> v }.toMap)
   }
 
@@ -277,23 +296,33 @@ final class Bench(spark: SparkSession, listener: Option[LayerListener], work: St
     (System.nanoTime() - t0, recs)
   }
 
-  // ---- pipeline: a cold pass over new data, two untimed passes of the
+  // ---- pipeline: a cold pass over new data, four untimed passes of the
   // keys while the JIT settles (early passes run several percent slower),
-  // then warm passes of the keys for `seconds` (at least three) ----
+  // then warm passes of the keys for `seconds` (at least three). Each pass
+  // after the cold one runs the keys in the plan's next seeded order ----
   def pipeline(plan: JsonNode, seconds: Double): Map[String, Any] = {
     val dir = plan.get("data").asText
     val reqs = plan.get("requests").asScala.toSeq
     val keys = reqs.filter(Ops.isKey)
     val (coldNs, cold) = pass(dir, reqs, "cold")
     Main.mark("cold pass")
-    val settle = (1 to 2).map { _ => gcBoundary(); pass(dir, keys, "settle")._2 }
+    val orders = plan.get("orders").asScala.map(_.asScala.map(_.asInt).toSeq).toIndexedSeq
+    var passes = 0
+    def keysPass(group: String): Map[String, Any] = {
+      gcBoundary()
+      val order = orders(passes % orders.length)
+      passes += 1
+      val j0 = Jit.ms(); val c0 = Jit.codegen()
+      val (ns, recs) = pass(dir, order.map(keys), group)
+      Map("ns" -> ns, "order" -> order, "jit_ms" -> (Jit.ms() - j0),
+        "codegen" -> (Jit.codegen() - c0), "ops" -> recs)
+    }
+    val settle = (1 to 4).map(_ => keysPass("settle"))
     val warm = mutable.ArrayBuffer.empty[Map[String, Any]]
     val start = System.nanoTime()
-    while (warm.length < 3 || System.nanoTime() - start < seconds * 1e9) {
-      gcBoundary()
-      val (ns, recs) = pass(dir, keys, "warm")
-      warm += Map("ns" -> ns, "ops" -> recs)
-    }
+    while (warm.length < 3 || System.nanoTime() - start < seconds * 1e9)
+      warm += keysPass("warm")
+    val codegen = warm.map(_("codegen").asInstanceOf[Long]).sum
     gcBoundary()
     // off the clock: each key once more into parquet, for the check
     val check = keys.map { q =>
@@ -303,7 +332,7 @@ final class Bench(spark: SparkSession, listener: Option[LayerListener], work: St
       finally Ops.release(spark)
     }
     Map("cold_ns" -> coldNs, "cold" -> cold, "settle" -> settle, "warm" -> warm.toSeq,
-      "check" -> check)
+      "codegen_classes" -> codegen, "check" -> check)
   }
 
   /** Staleness probe: replace the data's documents in place (keeping the
@@ -380,6 +409,16 @@ final class Bench(spark: SparkSession, listener: Option[LayerListener], work: St
       Seq(id.toLong, s"plan.$name", parent, (a - ms0).toDouble, (b - ms0).toDouble)
     }
   }
+}
+
+/** Compilation so far: milliseconds the JIT compilers have spent (summed
+  * over their threads), and the number of classes Spark's code generator
+  * has compiled (each a miss in its code cache). */
+object Jit {
+  private val bean = ManagementFactory.getCompilationMXBean
+  def ms(): Long = bean.getTotalCompilationTime
+  def codegen(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }
 
 /** Fixed-work CPU probe: xorshift steps on one thread, then on every core

@@ -12,6 +12,7 @@ import unittest
 import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import check  # noqa: E402
 import gen  # noqa: E402
 
 
@@ -68,6 +69,26 @@ class Determinism(SmallSizes):
             r = plan["distinct"][i]
             kinds.add(r["op"] if r["op"] != "buscar" else (set(r) - {"op"}).pop())
         self.assertEqual(kinds, set(gen.LOOKUP_MIX))
+
+
+class StaleProbe(unittest.TestCase):
+    def test_documents_probes_have_answers_before_and_after_replacement(self):
+        # a probe with an empty answer on the replacement cannot tell a
+        # stale reader's empty answer from a fresh one; at full size,
+        # pipeline seed 35 drew such an n_chars search before the probe
+        # was pointed at lengths both corpora contain
+        for w, seed in (("pipeline", 35), ("lookup", 1)):
+            with self.subTest(workload=w, seed=seed), tempfile.TemporaryDirectory() as work:
+                plan = gen.generate(w, seed, work)
+                for docs in (os.path.join(plan["data"], "documents.parquet"),
+                             plan["replacement"]):
+                    con = duckdb.connect()
+                    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{docs}'")
+                    for q in plan["probe"]:
+                        if q["op"] == "buscar":
+                            sql, args = check.twin_sql(q)
+                            n = con.execute(f"SELECT count(*) FROM ({sql})", args).fetchone()
+                            self.assertGreater(n[0], 0, q)
 
 
 # Exact token-set Jaccard over all document pairs, rounded half-up like

@@ -53,8 +53,10 @@ def main():
         groups = sorted(traced["per_layer_by_group"])
         md += ["", "| per-layer (mean per operation) | all | " + " | ".join(groups) + " |",
                "|---|---|" + "---|" * len(groups)]
+        by_group = traced["per_layer_by_group"]
         md += [f"| {k} ({v['unit']}) | {v['value']:.4g} | " +
-               " | ".join(f"{traced['per_layer_by_group'][g][k]:.4g}" for g in groups) + " |"
+               " | ".join(f"{by_group[g][k]:.4g}" if k in by_group[g] else "—"
+                          for g in groups) + " |"
                for k, v in traced["per_layer"].items()]
         md.append("")
     out = os.path.join(HERE, "results", f"traced_seed{a.seed}")
