@@ -33,7 +33,13 @@ object Bench {
         .partitionBy("o_custkey").orderBy("o_orderkey")
       Tables.orders(spark, sfDir).limit(2000)
         .withColumn("rn", row_number().over(w)).count()
-    } catch { case _: Throwable => () }
+    } catch {
+      // a broken warm-up only shifts one-time cost into the first timed
+      // queries, so the run carries on, but the cause must be visible
+      case e: Throwable =>
+        System.err.println(s"[bench] warm-up FAILED: ${e.getClass.getSimpleName}: " +
+          String.valueOf(e.getMessage).take(200))
+    }
     // Dev loop: SPARK_GRAFT_ONLY=q1,q2 times a subset (driver leaves it
     // unset and measures everything).
     val only = sys.env.get("SPARK_GRAFT_ONLY")

@@ -147,13 +147,12 @@ object DedupOps {
       org.apache.spark.sql.types.LongType)))
 
   /** Scratch-parquet memo of `dedup_near`'s exploded band table per
-    * (session, dir) — set-cardinality × [[Bands]] slim rows (r19 opt, the
-    * simhashSig pattern): the banding is Bands × RowsPerBand = 384
-    * min-hash folds over every unique set's token array, a pure function
-    * of the immutable fixture that re-ran at every pass. A fresh JVM
-    * re-derives in its cold pass; evicted with the collapse maps it
-    * derives from. */
-  private val nearBandsMemo = new SessionTableMemo(
+    * (session, dir) — set-cardinality × [[Bands]] slim rows: the banding
+    * is Bands × RowsPerBand = 384 min-hash folds over every unique set's
+    * token array, a pure function of the immutable fixture that would
+    * otherwise re-run at every pass. A fresh JVM re-derives in its cold
+    * pass. */
+  private val nearBandsMemo = new SessionTableMemo.Single(
     "graft_near_bands_", NearBandsSchema)
 
   private[graft] def nearBands(s: SparkSession, dir: String,
@@ -206,90 +205,44 @@ object DedupOps {
     org.apache.spark.sql.types.StructField("gid",
       org.apache.spark.sql.types.LongType)))
 
+  /** The two all-long collapse maps (`gid`, `doc`) per (session, dir),
+    * with the (nGids, thBytes, nDocs) measured by the same derivation
+    * run, so every dedup query after the first skips both the fingerprint
+    * groupBy + map join and the stats jobs. Five declared keys consume
+    * the identical collapse per sweep (near/simhash/ngram/prefix/contain,
+    * plus the label derivation). The maps are doc-/set-cardinality × 2
+    * longs; the token ARRAYS stay re-derived on demand in uniq(), since
+    * they are the corpus (scaladoc above). */
+  private val collapseMapsMemo =
+    new SessionTableMemo[(Long, Long, Long)]("graft_collapse_")
+
   private[graft] def collapse(s: SparkSession, dir: String): Collapse = {
     val df = docHashes(s, dir).withColumn("fp", xxhash64(col("th")))
-    // The two all-long maps are session-shared scratch parquet (r18 opt):
-    // FIVE declared keys consume the identical collapse per sweep
-    // (near/simhash/ngram/prefix/contain — plus the label derivation),
-    // and each was re-running the fingerprint groupBy + map join because
-    // Bench/Verify clear the SQL cache between queries (SimhashProbe:
-    // 0.29–0.34 s per consumer at sf0.1). Same materialized-view
-    // lifecycle as similarEdges/clusterLabels; the maps are
-    // doc-/set-cardinality × 2 longs. The token ARRAYS stay re-derived
-    // on demand in uniq() — materializing them was measured at ~10× the
-    // compute in the columnar cache (scaladoc above), and the parquet
-    // trade is the same: the arrays are the corpus, the maps are not.
-    val root = collapseMemo.getOrElseUpdate(s, dir) {
-      val out = new org.apache.hadoop.fs.Path(SimilarityOps.scratchRoot(s),
-        "graft_collapse_" +
-          java.util.UUID.randomUUID().toString.replace("-", ""))
+    val (maps, (nGids, thBytes, nDocs)) = collapseMapsMemo.materialize(s, dir) {
       // the collapse groupBy sees the arrays anyway, so the per-set token
       // count rides the SAME shuffle — the verify-stage broadcast budget
       // (thBytes) costs no extra scan
       val gidFull = df.groupBy("fp")
         .agg(min("doc_id").as("gid"), max(size(col("th"))).as("len"))
         .persist()
-      val st = gidFull.agg(count(lit(1)).as("n"),
-        coalesce(sum(col("len").cast("long")), lit(0L)).as("toks")).first()
-      val nGids = st.getLong(0)
-      val thBytes = 8L * st.getLong(1) + 32L * nGids
-      gidFull.select("fp", "gid").write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(out, "gid").toString)
-      val gidW = s.read.schema(GidMapSchema)
-        .parquet(new org.apache.hadoop.fs.Path(out, "gid").toString)
-      df.join(Bcast.ifFitsRows(gidW, nGids, 24), "fp")
-        .select("doc_id", "gid").write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(out, "doc").toString)
-      val nDocs = s.read.schema(DocMapSchema)
-        .parquet(new org.apache.hadoop.fs.Path(out, "doc").toString).count()
-      collapseStats.put(s, dir, (nGids, thBytes, nDocs))
-      gidFull.unpersist()
-      // orphan guard, as in similarEdges: reclaim on session death
-      out.getFileSystem(s.sessionState.newHadoopConf()).deleteOnExit(out)
-      out.toString
+      (out => {
+        val st = gidFull.agg(count(lit(1)).as("n"),
+          coalesce(sum(col("len").cast("long")), lit(0L)).as("toks")).first()
+        val nGids = st.getLong(0)
+        out.write("gid", gidFull.select("fp", "gid"))
+        out.write("doc", df.join(Bcast.ifFitsRows(out.read("gid", GidMapSchema),
+          nGids, 24), "fp").select("doc_id", "gid"))
+        (nGids, 8L * st.getLong(1) + 32L * nGids,
+          out.read("doc", DocMapSchema).count())
+      }, () => { gidFull.unpersist(); () })
     }
-    val (nGids, thBytes, nDocs) = collapseStats.get(s, dir).get
-    val gidMap = s.read.schema(GidMapSchema)
-      .parquet(new org.apache.hadoop.fs.Path(root, "gid").toString)
-    val docMap = s.read.schema(DocMapSchema)
-      .parquet(new org.apache.hadoop.fs.Path(root, "doc").toString)
+    val gidMap = maps.read("gid", GidMapSchema)
+    val docMap = maps.read("doc", DocMapSchema)
     def gidHinted = Bcast.ifFitsRows(gidMap, nGids, 24)
     val uniq = () => df.join(gidHinted, "fp")
       .filter(col("doc_id") === col("gid")).select(col("gid"), col("th"))
     Collapse(docMap, gidMap, uniq, nDocs, nGids, thBytes)
   }
-
-  /** Scratch roots of the memoized collapse maps per (session, dir) —
-    * see the derivation comment inside [[collapse]]. */
-  private val collapseMemo = new SessionMemo[String, String]
-
-  /** Drop a session's shared collapse-map materializations (spec
-    * isolation — mirrors [[evictSharedLabels]]); the stats memo is
-    * dropped with it so a re-derivation re-measures. */
-  private[graft] def evictSharedCollapse(s: SparkSession): Unit = {
-    collapseMemo.removeAll(s).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sessionState.newHadoopConf()).delete(hp, true)
-      ()
-    }
-    collapseStats.removeAll(s)
-    // the signature and band tables derive FROM the collapse maps (gid
-    // identity), so they must never outlive them — the pivotBfs
-    // derived-from invariant
-    simhashSigMemo.evict(s)
-    nearBandsMemo.evict(s)
-    ()
-  }
-
-  /** collapse()'s measured stats (nGids, thBytes, nDocs) memoized per
-    * (session, data dir), mirroring Bcast.measured: the fixture dirs
-    * are immutable within a session, so every dedup query after the
-    * first skips both collapse stats jobs. Populated inside the
-    * [[collapseMemo]] derivation block (r18) so the stats and the
-    * materialized maps always come from the same derivation run.
-    * Session-scoped via the weak-keyed [[SessionMemo]] (r11) so a
-    * recycled identity hash can never surface a stale measurement. */
-  private val collapseStats = new SessionMemo[String, (Long, Long, Long)]
 
   /** Expand surviving set-pairs (gid_a, gid_b, score) to member doc-pairs
     * with doc_a < doc_b, via two size-conditional broadcast joins on the
@@ -559,7 +512,7 @@ object DedupOps {
     * Session-shared scratch materialization (r18 opt): both consumers
     * re-ran the full gram join per query; the frame is doc-cardinality
     * × 3 longs, so the similarEdges write-once trade applies. */
-  private val substringSpansMemo = new SessionTableMemo(
+  private val substringSpansMemo = new SessionTableMemo.Single(
     "graft_substring_spans_",
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
@@ -1051,45 +1004,25 @@ object DedupOps {
 
   /** Session-shared (doc_id, cluster_id) label table: THREE declared keys
     * consume the identical labeling (`dedup_clusters`, `pipe_e2e`'s
-    * survivor filter, `pipe_near_dedup_report`'s histogram), and each was
-    * re-running the full SelfPairwise pair scan + CC because Bench/Verify
-    * clear the SQL cache between queries. Materialized ONCE per (session,
-    * fixture dir) to a session-scoped scratch parquet — the SAME
-    * materialized-view move, lifecycle, and cluster-safe scratch root as
-    * [[SimilarityOps.similarEdges]] (whose scaladoc carries the full
-    * rationale); the label table is doc-cardinality × 2 longs, orders of
-    * magnitude smaller than the corpus, so write-once + scan-per-query is
-    * the right trade at any scale (r18 opt round: derivation measured
-    * 0.9–1.2 s per consumer at sf0.1, × 3 consumers per sweep). */
-  private val labelMemo = new SessionMemo[String, String]
+    * survivor filter, `pipe_near_dedup_report`'s histogram), and each
+    * re-ran the full SelfPairwise pair scan + CC because Bench/Verify
+    * clear the SQL cache between queries. The label table is
+    * doc-cardinality × 2 longs, orders of magnitude smaller than the
+    * corpus, so write-once + scan-per-query is the right trade at any
+    * scale. */
+  private val clusterLabelsMemo = new SessionTableMemo.Single(
+    "graft_cluster_labels_",
+    org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("doc_id",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("cluster_id",
+        org.apache.spark.sql.types.LongType))))
 
-  private[graft] def clusterLabels(s: SparkSession, dir: String): DataFrame = {
-    val path = labelMemo.getOrElseUpdate(s, dir) {
-      val out = new org.apache.hadoop.fs.Path(SimilarityOps.scratchRoot(s),
-        "graft_cluster_labels_" +
-          java.util.UUID.randomUUID().toString.replace("-", ""))
-      val (labels, release) = deriveClusterLabels(s, dir)
-      labels.write.mode("overwrite").parquet(out.toString)
-      release()
-      // orphan guard, as in similarEdges: reclaim on session death
-      out.getFileSystem(s.sessionState.newHadoopConf()).deleteOnExit(out)
-      out.toString
-    }
-    s.read.parquet(path)
-  }
-
-  /** Drop a session's shared label materializations (spec isolation —
-    * mirrors [[SimilarityOps.evictSharedEdges]]) and delete their scratch
-    * dirs so evict/re-derive cycles never orphan parquet. */
-  private[graft] def evictSharedLabels(s: SparkSession): Unit =
-    labelMemo.removeAll(s).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sessionState.newHadoopConf()).delete(hp, true)
-      ()
-    }
+  private[graft] def clusterLabels(s: SparkSession, dir: String): DataFrame =
+    clusterLabelsMemo.getReleasing(s, dir)(deriveClusterLabels(s, dir))
 
   /** The (doc_id, cluster_id) labeling behind `dedup_clusters`, without
-    * the presentation sort — extracted (r11) so `pipe_e2e` can chain the
+    * the presentation sort, so `pipe_e2e` can chain the
     * near-dedup survivor filter (doc_id == cluster_id keeps exactly one
     * representative per J ≥ 0.9 component) without paying a range
     * exchange it immediately re-partitions away. cluster_id = the
@@ -1122,9 +1055,9 @@ object DedupOps {
       // task) when it is small — the measured common case: contraction
       // leaves one node per unique set — and by the iterative relational
       // loop below beyond [[LocalCCMaxEdges]].
-      // Labels persist (NOT localCheckpoint, r18 advice: checkpoint
-      // blocks outlived the one-shot write and pinned node-cardinality
-      // blocks for the session) — the count() below materializes the
+      // Labels persist (NOT localCheckpoint: checkpoint blocks outlive
+      // the one-shot write and pin node-cardinality blocks for the
+      // session) — the count() below materializes the
       // cache while edges is still persisted, so neither the count nor
       // the final join re-derives the pair scan; the caller releases
       // both handles once the parquet write has forced the plan.
@@ -1181,19 +1114,18 @@ object DedupOps {
       org.apache.spark.sql.types.LongType)))
 
   /** Scratch-parquet memo of the signature table per (session, dir) —
-    * set-cardinality × 2 longs, the collapse-map shape (r19 opt, verdict
-    * item 5): the md5 → hex-parse → 32-vote build is a pure function of
-    * the immutable fixture and was re-running at EVERY query pass (~55 %
-    * of the key, SimhashProbe), exactly the derivation class collapse()/
-    * clusterLabels/unigramCe already materialize once per session. A
-    * fresh JVM (every bench/Verify run) re-derives in its cold pass. */
-  private val simhashSigMemo = new SessionTableMemo(
+    * set-cardinality × 2 longs, the collapse-map shape: the md5 →
+    * hex-parse → 32-vote build is a pure function of the immutable
+    * fixture and was ~55 % of the key when it re-ran at every query pass
+    * (SimhashProbe). A fresh JVM (every bench/Verify run) re-derives in
+    * its cold pass. */
+  private val simhashSigMemo = new SessionTableMemo.Single(
     "graft_simhash_sig_", SimhashSigSchema)
 
   /** `dedup_simhash`'s signature stage — one 32-bit signature per UNIQUE
     * token set, as a persisted (gid, ARRAY<BIGINT>) relation ready for
-    * the fused SelfPairwise Hamming scan. Extracted (r18, r17 verdict
-    * item 4) so the signature build and the pair scan can be TIMED
+    * the fused SelfPairwise Hamming scan. Separate so the signature
+    * build and the pair scan can be TIMED
     * separately when attributing the key's steady-state cost. */
   private[graft] def simhashSig(s: SparkSession, dir: String,
       c: Collapse): DataFrame = {
@@ -1234,15 +1166,13 @@ object DedupOps {
       // executions (build collect + probe stream) from one evaluation —
       // it is |sets| slim (long, 1-word array) rows, the collapse-family
       // cache shape whose encode is noise (the expensive md5-vote build
-      // above lives in the once-per-session memo derivation, r19).
-      // Cache lifecycle (r17 advice): like collapse()'s
-      // persists, this entry is dropped by the harness's per-query
+      // above lives in the once-per-session memo derivation).
+      // Cache lifecycle: this entry is dropped by the harness's per-query
       // clearCache (Bench/Verify); within a long-lived session repeated
       // builder invocations do NOT pin fresh copies — CacheManager
       // dedups by semantic plan equality (cacheQuery is a no-op when
       // lookupCachedData hits), so one entry per (dir, conf) serves
-      // every rebuild, the same reuse the SessionMemo stats pattern
-      // gives the collapse maps.
+      // every rebuild.
       packed
         .select(col("gid"), array(col("sh")).as("sh"))
         .repartition(s.sessionState.conf.numShufflePartitions)

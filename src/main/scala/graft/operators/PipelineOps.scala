@@ -99,6 +99,21 @@ object PipelineOps {
     * scales exactly-rounded fp products). */
   val EpochBudgetTokens = 1.0e7
 
+  /** On-disk schema of the memoized ranked vocabulary. */
+  private val VocabSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("token",
+      org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("id",
+      org.apache.spark.sql.types.LongType)))
+
+  /** Scratch-parquet memo of the ranked (token, id) vocabulary per
+    * (session, dir, minCount) — dictionary-sized by the cutoff, with its
+    * measured serialized bytes as the memo value: the counts pass +
+    * range-partitioned rank + stats job are a pure function of the
+    * immutable fixture, so neither the vocabulary nor the encode join's
+    * broadcast decision costs a per-query job. */
+  private val vocabMemo = new SessionTableMemo[Long]("graft_vocab_")
+
   /** The `pipe_vocab` plan, parameterized so the spec can force both the
     * frequency cutoff and the non-broadcast join path.
     *
@@ -127,34 +142,11 @@ object PipelineOps {
     *    over the persisted dictionary-sized table.
     *  - The persist is SCOPED: the counts cache lives only inside the
     *    once-per-session vocab derivation and is released by the memo
-    *    after its one-shot parquet write (r19 — the write replaces the
-    *    earlier eager localCheckpoint as the single dictionary-sized
-    *    materialization); a library caller invoking this repeatedly
-    *    accumulates no cached vocabularies. */
-  /** On-disk schema of the memoized ranked vocabulary. */
-  private val VocabSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("token",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("id",
-      org.apache.spark.sql.types.LongType)))
-
-  /** Scratch-parquet memo of the ranked (token, id) vocabulary per
-    * (session, dir, minCount) — dictionary-sized by the cutoff (r19 opt,
-    * verdict items 7/8): the counts pass + range-partitioned rank + the
-    * stats job + an eager localCheckpoint all ran at EVERY vocabEncode
-    * construction for a table that is a pure function of the immutable
-    * fixture — the ann_pq-codebook class. The parquet write replaces the
-    * checkpoint as the one-shot materialization; the measured vocab
-    * bytes ride [[vocabStats]] from the same derivation run (the
-    * collapseStats pattern) so the encode join's broadcast decision
-    * costs no per-query job either. */
-  private val vocabMemo = new SessionTableMemo("graft_vocab_", VocabSchema)
-  private val vocabStats = new SessionMemo[String, Long]
-
+    *    after its one-shot parquet write; a library caller invoking this
+    *    repeatedly accumulates no cached vocabularies. */
   private[graft] def vocabEncode(s: SparkSession, dir: String,
                                  minCount: Long): DataFrame = {
-    val memoKey = s"$dir#$minCount"
-    val vocab = vocabMemo.getReleasing(s, memoKey) {
+    val (vocabDir, vocabBytes) = vocabMemo.materialize(s, s"$dir#$minCount") {
       val nParts = s.conf.get("spark.sql.shuffle.partitions").toInt
       val dToks = Tables.documents(s, dir)
         .select(posexplode(split(col("text"), " ")).as(Seq("pos", "token")))
@@ -167,27 +159,29 @@ object PipelineOps {
         .filter(col("cnt") >= minCount)
         .repartitionByRange(nParts, col("cnt").desc, col("token"))
         // no pre-persist sort — the rank window re-sorts above the cache,
-        // stats/offs are order-free (r18 opt: the agg_weighted_median trim)
+        // stats/offs are order-free
         .withColumn("pid", spark_partition_id())
         .persist()
-      // one job: vocab cardinality + measured token bytes (64 bytes/row of
-      // fixed overhead conservatively covers the id column and row framing)
-      val stats = counts.agg(count(lit(1)).as("n"),
-        coalesce(sum(length(col("token"))), lit(0L)).as("bytes")).first()
-      vocabStats.put(s, memoKey, stats.getLong(1) + 64L * stats.getLong(0))
-      val offs = counts.groupBy("pid").agg(count(lit(1)).as("n"))
-        .withColumn("offset",
-          coalesce(sum(col("n")).over(
-            Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)),
-            lit(0L)))
-        .select("pid", "offset")
-      val w = Window.partitionBy("pid").orderBy(col("cnt").desc, col("token"))
-      val v = counts.join(broadcast(offs), "pid")
-        .select(col("token"),
-          (row_number().over(w).cast("long") + col("offset")).as("id"))
-      (v, () => { counts.unpersist(); () })
+      (out => {
+        // one job: vocab cardinality + measured token bytes (64 bytes/row
+        // of fixed overhead conservatively covers the id column and row
+        // framing)
+        val stats = counts.agg(count(lit(1)).as("n"),
+          coalesce(sum(length(col("token"))), lit(0L)).as("bytes")).first()
+        val offs = counts.groupBy("pid").agg(count(lit(1)).as("n"))
+          .withColumn("offset",
+            coalesce(sum(col("n")).over(
+              Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)),
+              lit(0L)))
+          .select("pid", "offset")
+        val w = Window.partitionBy("pid").orderBy(col("cnt").desc, col("token"))
+        out.write("vocab", counts.join(broadcast(offs), "pid")
+          .select(col("token"),
+            (row_number().over(w).cast("long") + col("offset")).as("id")))
+        stats.getLong(1) + 64L * stats.getLong(0)
+      }, () => { counts.unpersist(); () })
     }
-    val vocabBytes = vocabStats.get(s, memoKey).get
+    val vocab = vocabDir.read("vocab", VocabSchema)
     val toks = Tables.documents(s, dir)
       .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "token")))
     // the broadcast decision stays per-CALL (live budget conf), only the
@@ -226,7 +220,7 @@ object PipelineOps {
     * construction (a benchmark suite, not the corpus), so Catalyst
     * broadcasts it and the training side streams through map-side — no
     * all-pairs comparison anywhere. */
-  private val decontamHitsMemo = new SessionTableMemo(
+  private val decontamHitsMemo = new SessionTableMemo.Single(
     "graft_decontam_hits_",
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",

@@ -73,19 +73,16 @@ object ProvidenciasOps {
     * localCheckpoints (the graph_kcore discipline) so the unrolled plan
     * never snowballs. Depth-exhausted levels are empty and later rounds
     * are no-ops on BOTH engines, so the fixed unroll replays early
-    * exhaustion exactly. */
-  private val bfsMemo = new SessionMemo[String, String]
-
-  /** Drop a session's materialized BFS level tables (spec isolation +
-    * the evictSharedEdges invariant: BFS is DERIVED from the shared
-    * edge table, so an edge evict clears it too), deleting the scratch
-    * parquet each memo value names (the similarEdges discipline). */
-  private[graft] def evictPivotBfs(s: SparkSession): Unit =
-    bfsMemo.removeAll(s).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sessionState.newHadoopConf()).delete(hp, true)
-      ()
-    }
+    * exhaustion exactly.
+    *
+    * Both derived tables live in ONE memoized scratch directory per
+    * (session, dir): `edges` = the symmetrized undirected edge list,
+    * `levels` = the BFS level tables (p, id, sigma, dist).
+    * graph_betweenness and graph_closeness consume the SAME forward BFS,
+    * and keeping the edge table inside the memo means a hit re-derives
+    * nothing. Derived from the shared edge table, so
+    * [[SimilarityOps.evictSharedEdges]] drops it too. */
+  private[operators] val pivotBfsMemo = new SessionTableMemo[Unit]("graft_pivot_bfs_")
 
   /** Partition count for the materialized symmetrized edge table.
     * `spark.graft.edgePartitions` (default 8 — sized for the contracted
@@ -106,12 +103,9 @@ object ProvidenciasOps {
 
   /** Node count per (session, dir) — the embeddings fixture is immutable,
     * so the count is too; memoizing it keeps a pivot-BFS memo hit at ZERO
-    * jobs (GraphSpec pins that), and it survives evictPivotBfs on purpose
+    * jobs (GraphSpec pins that), and it survives an edge evict on purpose
     * (an edge evict invalidates derived edges/levels, never the corpus).
-    * r18 opt: ALL node-count sites in this module route through it now
-    * (modularity, kcore, pagerank, eigenvector, jaccard_neighbors,
-    * adamic_adar previously each re-counted the table per construction —
-    * one scan job per bench pass apiece for a value that cannot change). */
+    * Every node-count site in this module routes through it. */
   private val nodeCountMemo = new SessionMemo[String, java.lang.Long]
 
   /** Fixed on-disk schemas of the two memoized scratch tables — passed to
@@ -135,82 +129,58 @@ object ProvidenciasOps {
       : (DataFrame, Long, Array[DataFrame]) = {
     val nodes = Tables.embeddings(s, dir).select(col("vec_id").as("id"))
     val nNodes: Long = nodeCountMemo.getOrElseUpdate(s, dir)(nodes.count())
-    // BOTH derived tables are memoized per (session, dir) to ONE scratch
-    // root: <root>/edges = the symmetrized undirected edge list,
-    // <root>/levels = the BFS level tables (p, id, dist, sigma) —
-    // graph_betweenness and graph_closeness consume the SAME forward
-    // BFS, and in-memory sharing (persist / per-level localCheckpoints)
-    // dies between queries under Verify/Bench's cache sweeps; the
-    // parquet memo survives both (the similarEdges materialized-view
-    // move). The edge table living INSIDE the memo (r14 verdict item 3)
-    // means a memo hit re-derives NOTHING: the old code rebuilt and
-    // re-persisted the symmetrization on every invocation — a second
-    // materialization for graph_betweenness, a leaked cache entry after
-    // evict, and pure waste for graph_closeness, which never reads it.
-    val path = bfsMemo.getOrElseUpdate(s, dir) {
-      val out = new org.apache.hadoop.fs.Path(
-        SimilarityOps.scratchRoot(s),
-        "graft_pivot_bfs_" +
-          java.util.UUID.randomUUID().toString.replace("-", ""))
-      // orphan guard BEFORE the first write: a BFS job or the levels
-      // write failing mid-build leaves no memo entry to evict, so the
-      // shutdown hook is the only thing reclaiming a half-built dir
-      out.getFileSystem(s.sessionState.newHadoopConf()).deleteOnExit(out)
-      val edgesPath = new org.apache.hadoop.fs.Path(out, "edges").toString
-      val e = SimilarityOps.similarEdges(s, dir).select(col("src"), col("dst"))
-      e.select(explode(array(
+    val (tables, _) = pivotBfsMemo.materialize(s, dir) {
+      val sym = SimilarityOps.similarEdges(s, dir).select(col("src"), col("dst"))
+        .select(explode(array(
           struct(col("src").as("s"), col("dst").as("d")),
           struct(col("dst").as("s"), col("src").as("d")))).as("p"))
         .select(col("p.s").as("s"), col("p.d").as("d"))
         .coalesce(edgePartitions(s))
-        .write.mode("overwrite").parquet(edgesPath)
-      val und = s.read.schema(EdgesSchema).parquet(edgesPath)
-      val pivots = nodes
-        .orderBy(md5(col("id").cast("string")), col("id"))
-        .limit(BetwPivots)
-        .select(col("id").as("p"))
-      val levels = new Array[DataFrame](BetwDepth + 1)
-      levels(0) = pivots.select(col("p"), col("p").as("id"), lit(1L).as("sigma"))
-        .localCheckpoint()
-      var vis = levels(0)
-      for (k <- 1 to BetwDepth) {
-        // the (pivots × frontier) relation is the small side — the edge
-        // list shuffles, the frontier broadcasts while it fits
-        val fr = Bcast.ifFitsRows(
-          levels(k - 1).select(col("p"), col("id").as("fid"), col("sigma")),
-          nNodes * BetwPivots.toLong, 24)
-        val expand = und.join(fr, und("s") === col("fid"))
-          .select(col("p"), und("d").as("nid"), col("sigma"))
-        levels(k) = expand
-          .join(Bcast.ifFitsRows(
-              vis.select(col("p").as("xp"), col("id").as("xid")),
-              nNodes * BetwPivots.toLong, 16),
-            expand("p") === col("xp") && col("nid") === col("xid"),
-            "left_anti")
-          .groupBy(col("p"), col("nid"))
-          .agg(sum(col("sigma")).as("sigma"))
-          .select(col("p"), col("nid").as("id"), col("sigma"))
+      (out => {
+        out.write("edges", sym)
+        val und = out.read("edges", EdgesSchema)
+        val pivots = nodes
+          .orderBy(md5(col("id").cast("string")), col("id"))
+          .limit(BetwPivots)
+          .select(col("id").as("p"))
+        val levels = new Array[DataFrame](BetwDepth + 1)
+        levels(0) = pivots.select(col("p"), col("p").as("id"), lit(1L).as("sigma"))
           .localCheckpoint()
-        vis = vis.unionByName(levels(k))
-      }
-      (0 to BetwDepth).map(k => levels(k).withColumn("dist", lit(k)))
-        .reduce(_ unionByName _)
-        .write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(out, "levels").toString)
-      out.toString
+        var vis = levels(0)
+        for (k <- 1 to BetwDepth) {
+          // the (pivots × frontier) relation is the small side — the edge
+          // list shuffles, the frontier broadcasts while it fits
+          val fr = Bcast.ifFitsRows(
+            levels(k - 1).select(col("p"), col("id").as("fid"), col("sigma")),
+            nNodes * BetwPivots.toLong, 24)
+          val expand = und.join(fr, und("s") === col("fid"))
+            .select(col("p"), und("d").as("nid"), col("sigma"))
+          levels(k) = expand
+            .join(Bcast.ifFitsRows(
+                vis.select(col("p").as("xp"), col("id").as("xid")),
+                nNodes * BetwPivots.toLong, 16),
+              expand("p") === col("xp") && col("nid") === col("xid"),
+              "left_anti")
+            .groupBy(col("p"), col("nid"))
+            .agg(sum(col("sigma")).as("sigma"))
+            .select(col("p"), col("nid").as("id"), col("sigma"))
+            .localCheckpoint()
+          vis = vis.unionByName(levels(k))
+        }
+        out.write("levels", (0 to BetwDepth)
+          .map(k => levels(k).withColumn("dist", lit(k)))
+          .reduce(_ unionByName _))
+      }, () => ())
     }
     // memo hit or miss, every consumer reads the SAME parquet tables —
     // lazy scans, so graph_closeness (which never evaluates the edge
-    // frame) costs nothing for it and launches no symmetrization job
-    // (GraphSpec pins the job count on the second consumer)
-    val und = s.read.schema(EdgesSchema).parquet(
-      new org.apache.hadoop.fs.Path(path, "edges").toString)
-    val vis = s.read.schema(LevelsSchema).parquet(
-      new org.apache.hadoop.fs.Path(path, "levels").toString)
+    // frame) launches no symmetrization job (GraphSpec pins the job count
+    // on the second consumer)
+    val vis = tables.read("levels", LevelsSchema)
     val levels = (0 to BetwDepth).map(k =>
       vis.filter(col("dist") === k).select(col("p"), col("id"),
         col("sigma"))).toArray
-    (und, nNodes, levels)
+    (tables.read("edges", EdgesSchema), nNodes, levels)
   }
 
   /** Accented query forms for the unaccent variant — what a Spanish search
@@ -312,7 +282,7 @@ object ProvidenciasOps {
     (1 to iters).foldLeft(l0)((l, _) => step(l))
   }
 
-  private val propLabelsMemo = new SessionTableMemo(
+  private[operators] val propLabelsMemo = new SessionTableMemo.Single(
     "graft_prop_labels_",
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id",
@@ -320,7 +290,7 @@ object ProvidenciasOps {
       org.apache.spark.sql.types.StructField("lbl",
         org.apache.spark.sql.types.LongType))))
 
-  /** Session-shared (r18 opt): the 2-superstep [[labelPropagate]] labels
+  /** Session-shared: the 2-superstep [[labelPropagate]] labels
     * over the SIMILAR graph are ONE community definition with two
     * declared consumers (`graph_label_prop`, `graph_modularity` — the
     * oracle already nests the shared CTE chain), and each re-ran both
@@ -329,14 +299,10 @@ object ProvidenciasOps {
     * deterministic (count desc, min label) tiebreak makes the derivation
     * replayable, so the shared table cannot fork between consumers. The
     * edge persist is released by the memo right after the one-shot write
-    * forces the plan (getReleasing — the r18-advice lifecycle). */
+    * forces the plan. Derived from the shared edge table, so
+    * [[SimilarityOps.evictSharedEdges]] drops them too. */
   private[graft] def propLabels(s: SparkSession, dir: String): DataFrame =
     propLabelsMemo.getReleasing(s, dir)(derivePropLabels(s, dir))
-
-  /** Labels are DERIVED from the shared edge table — evicted with it by
-    * [[SimilarityOps.evictSharedEdges]] (the pivotBfs invariant). */
-  private[graft] def evictPropLabels(s: SparkSession): Unit =
-    propLabelsMemo.evict(s)
 
   private def derivePropLabels(s: SparkSession, dir: String)
       : (DataFrame, () => Unit) = {
@@ -348,7 +314,7 @@ object ProvidenciasOps {
       .select(col("p.s").as("s"), col("p.d").as("d"))
       .persist()
     val nodes = Tables.embeddings(s, dir).select(col("vec_id").as("id"))
-    // no localCheckpoint (r18 advice): the memo's one-shot parquet write
+    // no localCheckpoint: the memo's one-shot parquet write
     // is the only consumer and itself forces the plan — a checkpoint
     // here just duplicated the labels as pinned RDD blocks that outlived
     // the write; e stays cached across the two supersteps and the memo

@@ -135,19 +135,19 @@ object SimilarityOps {
 
   /** Session-shared SIMILAR edge table at [[EdgeThreshold]]: the
     * thresholded (src, dst, similitud) list every graph-family query and
-    * `sql_recursive` consume. Derived ONCE per (session, fixture dir) via
-    * [[pairwiseTriangular]] and materialized to a session-scoped temp
-    * parquet — the materialized-view move a production pipeline makes
-    * with a derived edge table. In-memory sharing (persist /
-    * localCheckpoint) dies between queries here: Verify and Bench
-    * deliberately clear the SQL cache and unpersist RDD blocks after
-    * every query, so 19 graph queries each re-ran the O(n²) derivation;
-    * the parquet memo survives both sweeps, and its value is just a path
-    * string, so the weak-keyed [[SessionMemo]] never pins the session.
-    * At 100 TB the contracted edge list is orders of magnitude smaller
-    * than the corpus — writing it once and scanning it per query is
-    * exactly the right trade. */
-  private val edgeMemo = new SessionMemo[String, String]
+    * `sql_recursive` consume, derived ONCE per (session, fixture dir) via
+    * [[pairwiseTriangular]] — the materialized-view move a production
+    * pipeline makes with a derived edge table. At 100 TB the contracted
+    * edge list is orders of magnitude smaller than the corpus, so writing
+    * it once and scanning it per query is the right trade. */
+  private val simEdgesMemo = new SessionTableMemo.Single("graft_sim_edges_",
+    org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("src",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("dst",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("similitud",
+        org.apache.spark.sql.types.DoubleType))))
 
   /** `ann_pq`'s trained codebook per (session, dir) — 16 centroids × 4
     * subspaces × 16 doubles, a pure function of the immutable fixture
@@ -156,49 +156,17 @@ object SimilarityOps {
   private val pqCodebookMemo =
     new SessionMemo[String, Seq[(Int, Seq[(Int, Seq[Double])])]]
 
-  /** Scratch root for session-shared materializations. r13 verdict item
-    * 2: `Files.createTempDirectory` resolves on the DRIVER's local
-    * filesystem — fine under `local[32]`, broken on a real cluster where
-    * executors can't read the driver's /tmp. The root is therefore a
-    * conf key (`spark.graft.scratchDir`) defaulting to the session's
-    * warehouse dir — both are shared-filesystem locations on any sane
-    * cluster deployment (HDFS/S3/NFS), so the materialized edge table is
-    * readable from every executor. */
-  private[graft] val ScratchDirKey = "spark.graft.scratchDir"
+  def similarEdges(s: SparkSession, dir: String): DataFrame =
+    simEdgesMemo.get(s, dir)(pairwiseTriangular(s, dir, EdgeThreshold))
 
-  private[graft] def scratchRoot(s: SparkSession): String =
-    s.conf.getOption(ScratchDirKey)
-      .getOrElse(s.conf.get("spark.sql.warehouse.dir"))
-
-  def similarEdges(s: SparkSession, dir: String): DataFrame = {
-    val path = edgeMemo.getOrElseUpdate(s, dir) {
-      val out = new org.apache.hadoop.fs.Path(scratchRoot(s),
-        "graft_sim_edges_" +
-          java.util.UUID.randomUUID().toString.replace("-", ""))
-      pairwiseTriangular(s, dir, EdgeThreshold)
-        .write.mode("overwrite").parquet(out.toString)
-      // orphan guard: if the session dies without an evict, the Hadoop
-      // FileSystem shutdown hook still reclaims the scratch dir
-      out.getFileSystem(s.sessionState.newHadoopConf()).deleteOnExit(out)
-      out.toString
-    }
-    s.read.parquet(path)
-  }
-
-  /** Drop a session's shared edge materializations (spec isolation: plan
-    * assertions on the DERIVATION need the next call to re-derive) AND
-    * delete their scratch directories — the memo value is the path, so
-    * evict/re-derive cycles must not orphan parquet dirs (r13 advice).
-    * The pivot-BFS levels and the propagation labels are DERIVED from
-    * this edge table, so they evict with it. */
+  /** Drop a session's shared edge materialization (spec isolation: plan
+    * assertions on the DERIVATION need the next call to re-derive). The
+    * pivot-BFS tables and the propagation labels are derived from the
+    * edge table, so they are dropped with it. */
   def evictSharedEdges(s: SparkSession): Unit = {
-    edgeMemo.removeAll(s).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sessionState.newHadoopConf()).delete(hp, true)
-      ()
-    }
-    ProvidenciasOps.evictPivotBfs(s)
-    ProvidenciasOps.evictPropLabels(s)
+    simEdgesMemo.evict(s)
+    ProvidenciasOps.pivotBfsMemo.evict(s)
+    ProvidenciasOps.propLabelsMemo.evict(s)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -747,7 +715,7 @@ object SimilarityOps {
     * component means, (distance, cid) argmin tiebreak) — extracted so
     * `dedup_semantic` partitions by the SAME clusters `ml_kmeans`
     * reports; both oracles replay the identical unrolled loop. */
-  private val lloydAssignMemo = new SessionTableMemo(
+  private val lloydAssignMemo = new SessionTableMemo.Single(
     "graft_lloyd_assign_",
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("vec_id",

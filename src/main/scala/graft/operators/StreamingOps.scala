@@ -1388,7 +1388,7 @@ object StreamingOps {
     * Degenerate series (n < S or zero variance) are excluded by the
     * integer/compare gate both engines replay. Output: (user_id, n,
     * seg, z). */
-  private val paaSegmentsMemo = new SessionTableMemo(
+  private val paaSegmentsMemo = new SessionTableMemo.Single(
     "graft_paa_segments_",
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("user_id",

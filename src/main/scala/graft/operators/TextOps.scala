@@ -52,7 +52,7 @@ object TextOps {
 
   private def tokens(c: Column): Column = split(c, " ")
 
-  private val unigramCeMemo = new SessionTableMemo(
+  private val unigramCeMemo = new SessionTableMemo.Single(
     "graft_unigram_ce_",
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",

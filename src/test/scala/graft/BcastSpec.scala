@@ -128,4 +128,34 @@ class BcastSpec extends SparkSpec {
     degradesCleanly("pipe_decontaminate_near",
       PipelineOps.queries("pipe_decontaminate_near"))
   }
+
+  test("a scratch-table derivation that fails mid-write leaves no " +
+      "directory and no memo entry; the next call re-derives") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val root = java.nio.file.Files.createTempDirectory("graft_scratch_fail")
+    def leftovers: Seq[String] = Option(root.toFile.listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.startsWith("graft_fail_probe_"))
+    val memo = new SessionTableMemo.Single("graft_fail_probe_",
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("id",
+          org.apache.spark.sql.types.LongType))))
+    val boom = udf((x: Long) => {
+      if (x == 2L) throw new IllegalStateException("injected")
+      x
+    })
+    withConfs(SessionTableMemo.ScratchDirKey -> root.toString) {
+      try {
+        intercept[Exception] {
+          memo.get(spark, "k")(spark.range(0, 4, 1, 1)
+            .select(boom(col("id")).as("id")))
+        }
+        assert(leftovers.isEmpty, s"failed derivation left $leftovers")
+        val rows = memo.get(spark, "k")(spark.range(0, 3, 1, 1).toDF("id"))
+          .collect().map(_.getLong(0)).sorted.toSeq
+        assert(rows === Seq(0L, 1L, 2L))
+      } finally memo.evict(spark)
+    }
+    assert(leftovers.isEmpty)
+    root.toFile.delete()
+  }
 }

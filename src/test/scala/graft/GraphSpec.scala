@@ -41,12 +41,12 @@ class GraphSpec extends SparkSpec {
 
   test("similarEdges scratch root honors spark.graft.scratchDir and " +
       "evict deletes the materialization") {
-    import graft.operators.SimilarityOps
+    import graft.operators.{SessionTableMemo, SimilarityOps}
     val root = java.nio.file.Files.createTempDirectory("graft_scratch_conf")
     def scratchDirs(prefix: String): Seq[String] =
       Option(root.toFile.listFiles()).toSeq.flatten
         .map(_.getName).filter(_.startsWith(prefix))
-    spark.conf.set(SimilarityOps.ScratchDirKey, root.toString)
+    spark.conf.set(SessionTableMemo.ScratchDirKey, root.toString)
     // any edge table memoized under the DEFAULT root must not satisfy
     // the conf'd run
     SimilarityOps.evictSharedEdges(spark)
@@ -59,33 +59,29 @@ class GraphSpec extends SparkSpec {
       assert(q("graph_betweenness").count() > 0)
       assert(scratchDirs("graft_pivot_bfs_").nonEmpty,
         "pivot-BFS materialization did not land under the configured root")
-      // r13 advice: evict must DELETE the scratch dirs, not just drop
-      // the memo entries (evict/re-derive cycles were orphaning them)
+      // evict must DELETE the scratch dirs, not just drop the memo
+      // entries, or evict/re-derive cycles orphan them
       SimilarityOps.evictSharedEdges(spark)
       assert(scratchDirs("graft_sim_edges_").isEmpty,
         "evictSharedEdges left an orphaned edge scratch directory behind")
       assert(scratchDirs("graft_pivot_bfs_").isEmpty,
         "evictSharedEdges left an orphaned BFS scratch directory behind")
     } finally {
-      spark.conf.unset(SimilarityOps.ScratchDirKey)
+      spark.conf.unset(SessionTableMemo.ScratchDirKey)
       SimilarityOps.evictSharedEdges(spark)
     }
   }
 
   test("second centrality consumer launches no edge-symmetrization or " +
       "BFS job — the edge table lives inside the pivot-BFS memo") {
-    // r14 verdict item 3: pivotBfs rebuilt and re-persisted the
-    // symmetrized edge frame on EVERY invocation, memo hit or not. Both
-    // derived tables (edges + levels) now materialize once under the
-    // memoized scratch root; a memo hit must launch at most ONE job (the
-    // node-count scan) — the BcastSpec/PipelineSpec listener-count
-    // discipline (stability-settled counting; an unsettleable host must
-    // CANCEL, not fail).
+    // Both pivot-BFS tables (edges + levels) materialize once under the
+    // memoized scratch root, so a memo hit must launch no job. Counting
+    // is stability-settled; an unsettleable host must CANCEL, not fail.
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import graft.operators.{ProvidenciasOps => P, SimilarityOps}
     val counter = new java.util.concurrent.atomic.AtomicInteger
-    // r16 (advisor): count ONLY jobs carrying the probe's job group, so
-    // a stray async job from another suite can never fail repeat === 0
+    // count ONLY jobs carrying the probe's job group, so a stray async
+    // job from another suite can never fail repeat === 0
     val probeGroup = "graft-memo-probe"
     val l = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
@@ -126,6 +122,20 @@ class GraphSpec extends SparkSpec {
     assert(repeat === 0,
       s"memo hit ran $repeat jobs — an edge symmetrization, BFS level, " +
         "schema-inference, or count job leaked past the memo")
+    // every other scratch-table memo: after one derivation, a repeat
+    // construction reads the parquet back with its fixed schema and runs
+    // no derivation, stats or schema-inference job
+    import graft.operators.{DedupOps, PipelineOps}
+    val hits: Seq[(String, () => Unit)] = Seq(
+      "similarEdges" -> (() => { SimilarityOps.similarEdges(spark, SfDir); () }),
+      "clusterLabels" -> (() => { DedupOps.clusterLabels(spark, SfDir); () }),
+      "collapse" -> (() => { DedupOps.collapse(spark, SfDir); () }),
+      "vocabEncode" -> (() => { PipelineOps.vocabEncode(spark, SfDir, PipelineOps.VocabMinCount); () }))
+    hits.foreach { case (_, body) => body() }
+    hits.foreach { case (name, body) =>
+      val n = jobsDuring(body())
+      assert(n === 0, s"$name memo hit ran $n jobs")
+    }
   }
 
   test("graph_betweenness equals the brute sampled-Brandes stress replay") {
