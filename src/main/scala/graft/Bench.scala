@@ -1,15 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
+    sys.env.get("SPARK_GRAFT_AQE").foreach(spark.conf.set("spark.sql.adaptive.enabled", _))
     spark.sparkContext.setLogLevel("WARN")
     // warm the JVM (codegen compiler, parquet readers, shuffle machinery,
     // broadcast exchange, window exec, and the custom pairwise operator)
@@ -42,16 +37,7 @@ object Bench {
     }
     // Dev loop: SPARK_GRAFT_ONLY=q1,q2 times a subset (driver leaves it
     // unset and measures everything).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    // fail fast on a misspelled filter name — a silent drop times a
-    // subset the caller didn't ask for (same guard as graft.Verify)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: " +
-          unknown.toSeq.sorted.mkString(", "))
-    }
+    val only = SparkEntry.onlyFromEnv()
     val selected = only match {
       case Some(ks) => SparkEntry.queries.filter { case (k, _) => ks(k) }
       case None     => SparkEntry.queries

@@ -12,9 +12,11 @@ import graft.functions.{FloatCosine, MinHashBands, MinHashes, SimHash, SortedLon
   * optimizer rule, and the [[graft.plans.SelfPairwiseStrategy]] planner
   * strategy that executes its rewrites.
   *
-  * Wire-up (either):
-  *   SparkSession.builder().withExtensions(new GraftExtensions), or
-  *   --conf spark.sql.extensions=graft.GraftExtensions
+  * Wire-up: [[GraftSession.configure]] adds it to a builder
+  * (`withExtensions(new GraftExtensions)`); a session started with
+  * `--conf spark.sql.extensions=graft.GraftExtensions` gets the rest of
+  * graft's wiring from [[GraftSession.install]], which leaves these
+  * registrations as they are.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

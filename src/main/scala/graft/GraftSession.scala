@@ -22,6 +22,13 @@ import org.apache.spark.sql.SparkSession
   *     - session timezone pinned to UTC so date_trunc/window semantics
   *       are reproducible across machines (SURVEY §7.4).
   *
+  * This object is the only code that wires graft into a session: query
+  * constructors and operators never wire anything into the session they
+  * are given (the one data-dependent conf flip is described below), so
+  * every harness (tests, `Verify`, `Bench`, `PlanDump`) takes its
+  * session from [[local]], and a session built elsewhere goes through
+  * [[install]] first.
+  *
   * Usage:
   * {{{
   *   val spark = GraftSession.local(cores = 32)
@@ -61,9 +68,16 @@ object GraftSession {
     * (builder-time confs still apply), so without this step a notebook or
     * shell that already holds a session would get a GraftSession with none
     * of the SQL functions and no pairwise strategy — and no error until
-    * the first query. Safe to call any number of times on any session. */
+    * the first query. A session that already plans through
+    * [[plans.SelfPairwiseStrategy]] (built with [[GraftExtensions]]) keeps
+    * its extension wiring; otherwise the rewrite rule and the strategy are
+    * added through `spark.experimental`. Safe to call any number of times
+    * on any session. */
   def install(spark: SparkSession): Unit = {
-    plans.PairwiseRewrite.install(spark)
+    if (!spark.sessionState.planner.strategies.exists(_.isInstanceOf[plans.SelfPairwiseStrategy])) {
+      spark.experimental.extraOptimizations :+= plans.PairwiseRewrite
+      spark.experimental.extraStrategies :+= new plans.SelfPairwiseStrategy
+    }
     if (!spark.catalog.functionExists("float_cosine"))
       new GraftExtensions().registerInto(spark)
     if (spark.conf.getOption("spark.sql.catalog.graft").isEmpty)

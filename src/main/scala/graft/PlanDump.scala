@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-deliverable harness: `sbt "runMain graft.PlanDump <suffix> <key>[,<key>...]"`
   * writes `plans/<round>/<key>_<suffix>.txt` (round = $SPARK_GRAFT_PLANS,
   * default the current optimization round) containing the formatted physical
@@ -18,12 +16,7 @@ object PlanDump {
     val keys = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val unknown = keys.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown keys: ${unknown.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = Paths.get("plans", sys.env.getOrElse("SPARK_GRAFT_PLANS", "r19"))

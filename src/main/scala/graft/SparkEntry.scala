@@ -38,6 +38,20 @@ object SparkEntry {
       MergeOps.queries ++
       graft.sources.SourceOps.queries
 
+  /** The harnesses' dev filter: the keys named in `SPARK_GRAFT_ONLY`
+    * (comma-separated), or None when it is unset. A name not in
+    * [[queries]] fails fast — a misspelled or stale name would otherwise
+    * run a subset nobody asked for, or nothing at all. */
+  def onlyFromEnv(): Option[Set[String]] = {
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+    only.foreach { names =>
+      val unknown = names -- queries.keySet
+      require(unknown.isEmpty, "SPARK_GRAFT_ONLY names not in SparkEntry.queries: " +
+        unknown.toSeq.sorted.mkString(", "))
+    }
+    only
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Keys absent here (hash-/sketch-specific ops)
     * get the driver's weaker rows-only check and are covered by the

@@ -531,8 +531,7 @@ object DedupOps {
     // over the k-token string re-concat: each token's bytes are hashed
     // once per doc instead of k times through concat_ws allocations, and
     // the per-position hash input is a fixed 8·k bytes (r18 opt round,
-    // guide §1.2 per-task work; SubstringProbe: gram stage 0.47 → 0.31 s
-    // med isolated at sf0.1). Distinct grams collide only at the same
+    // guide §1.2 per-task work). Distinct grams collide only at the same
     // ~n²/2⁶⁴ odds the previous concat key accepted (the oracle groups
     // the gram TEXT, so the key is free to be any sound fingerprint).
     val th = transform(split(col("text"), " "), t => xxhash64(t))
@@ -549,8 +548,7 @@ object DedupOps {
     // "appears in >1 distinct doc" ⟺ min(doc_id) < max(doc_id): one
     // map-side-combined exchange on gh instead of countDistinct's
     // two-exchange (gh, doc_id) dedup expansion (r18 opt round, guide
-    // §2.4; SubstringProbe: dup build 0.85 → 0.53 s med isolated with
-    // both changes — the hashpartitioning(gh, doc_id) exchange is gone)
+    // §2.4: the hashpartitioning(gh, doc_id) exchange is gone)
     val dupGrams = grams.groupBy("gh")
       .agg(min("doc_id").as("mn"), max("doc_id").as("mx"))
       .filter(col("mn") =!= col("mx"))
@@ -1116,8 +1114,8 @@ object DedupOps {
   /** Scratch-parquet memo of the signature table per (session, dir) —
     * set-cardinality × 2 longs, the collapse-map shape: the md5 →
     * hex-parse → 32-vote build is a pure function of the immutable
-    * fixture and was ~55 % of the key when it re-ran at every query pass
-    * (SimhashProbe). A fresh JVM (every bench/Verify run) re-derives in
+    * fixture and was ~55 % of the key when it re-ran at every query
+    * pass. A fresh JVM (every bench/Verify run) re-derives in
     * its cold pass. */
   private val simhashSigMemo = new SessionTableMemo.Single(
     "graft_simhash_sig_", SimhashSigSchema)

@@ -423,7 +423,8 @@ object JoinOps {
     * broadcast back). Two exchanges touch the merge relation (the
     * range-partition total sort, then the (pid, nation) hash exchange the
     * segment windows require — slim 5-column rows both times, audited
-    * via graft.Explain); both inputs can be billions of rows. Refs sort before probes at equal balance, so an
+    * in the `graft.PlanDump` plan); both inputs can be billions of rows.
+    * Refs sort before probes at equal balance, so an
     * exactly-equal balance is "at or below" (distance 0); ties between
     * sides prefer the LOWER balance; distances are single exactly-rounded
     * IEEE subtractions, so the <= compare matches the oracle's ORDER BY

@@ -174,11 +174,11 @@ object SimilarityOps {
     // thresholded to keep the edge set sparse. Written DECLARATIVELY — a
     // plain self-join + cosine + filter, the code any Spark user would
     // write — and rewritten to the fused [[graft.plans.SelfPairwise]]
-    // operator by the [[graft.plans.PairwiseRewrite]] optimizer rule
-    // (plan shape pinned in PairwiseRewriteSpec; parity with the explicit
-    // operator API pinned in SelfPairwiseSpec).
+    // operator by the [[graft.plans.PairwiseRewrite]] optimizer rule that
+    // [[graft.GraftSession]] wires into the session (plan shape pinned in
+    // PairwiseRewriteSpec; parity with the explicit operator API pinned in
+    // SelfPairwiseSpec).
     "sim_edges" -> ((s, dir) => {
-      graft.plans.PairwiseRewrite.install(s)
       val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       e.alias("a").join(e.alias("b"), col("a.vec_id") < col("b.vec_id"))
         .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),

@@ -44,24 +44,13 @@ import graft.functions.FloatCosine
   * ever written); the original comparison is re-applied above the operator,
   * so the rewrite is exact even when the bound extraction under-approximates.
   *
-  * Registered per-session via [[PairwiseRewrite.install]]
-  * (`spark.experimental.extraOptimizations` — runs after the standard
-  * batches, i.e. after filters have been pushed into the join condition)
-  * or globally via [[graft.GraftExtensions]].
+  * Registered by [[graft.GraftExtensions]] (an operator-optimization
+  * rule, so it sees filters already pushed into the join condition), or
+  * by [[graft.GraftSession.install]] on a live session built without the
+  * extensions (as an experimental optimization, run after the standard
+  * batches).
   */
 object PairwiseRewrite extends Rule[LogicalPlan] with PredicateHelper {
-
-  /** Idempotently hook the rule + the SelfPairwise planning strategy into
-    * a live session (the no-extensions path; GraftExtensions covers
-    * `--conf spark.sql.extensions` sessions). */
-  def install(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(PairwiseRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PairwiseRewrite
-    if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[SelfPairwiseStrategy]))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ new SelfPairwiseStrategy
-  }
 
   /** Re-entry latch (r13 advice): the grid branch optimizes a
     * DataFrame-authored subtree from INSIDE this rule, re-running the
@@ -207,8 +196,8 @@ object PairwiseRewrite extends Rule[LogicalPlan] with PredicateHelper {
       case Some(blocks) if triangular =>
         // The grid plan is authored through the DataFrame API (it is
         // ordinary explode/join/filter relational algebra, not a custom
-        // node) and grafted in OPTIMIZED form — this rule runs after the
-        // standard batches, so the subtree must arrive with hints folded
+        // node) and grafted in OPTIMIZED form — this rule may run after
+        // the standard batches, so the subtree must arrive with hints folded
         // (a surviving ResolvedHint is a planner error) and its own
         // pruning/pushdown already done. Its internal `score >= minScore`
         // filter carries the same conservative raw bound as the

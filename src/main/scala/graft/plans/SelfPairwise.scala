@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
@@ -69,16 +69,13 @@ object SelfPairwise {
     * those k rows. This replaces `pairwise -> explode -> 25M-row
     * ObjectHashAggregate` with a fused scan that materializes n*k rows
     * total; the tiny downstream window re-ranks with Spark's own `round`,
-    * so final rn values are engine-exact. */
+    * so final rn values are engine-exact.
+    *
+    * The node plans only on a session that carries
+    * [[SelfPairwiseStrategy]]; [[graft.GraftSession]] wires it, this
+    * constructor leaves the session untouched. */
   def apply(df: DataFrame, score: Score, minScore: Double,
             triangular: Boolean, topK: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    // idempotently register the planning strategy on whatever session the
-    // driver hands us (ExperimentalMethods is the runtime hook; the
-    // GraftExtensions path covers --conf spark.sql.extensions sessions)
-    if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[SelfPairwiseStrategy]))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ new SelfPairwiseStrategy
     // output attrs are generated ONCE and carried as a field — a plain
     // `val output` would mint fresh exprIds on every tree copy and break
     // upstream attribute resolution
@@ -86,7 +83,7 @@ object SelfPairwise {
       AttributeReference("src", LongType, nullable = false)(),
       AttributeReference("dst", LongType, nullable = false)(),
       AttributeReference("score", DoubleType, nullable = false)())
-    Bridge.ofRows(spark,
+    Bridge.ofRows(df.sparkSession,
       SelfPairwiseNode(Bridge.logicalPlan(df), score, minScore, triangular, topK, out))
   }
 }

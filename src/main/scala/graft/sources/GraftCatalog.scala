@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * generator to pure SQL — the catalog API surface of the engine:
   *
   * {{{
-  *   spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+  *   val spark = graft.GraftSession.local(cores = 4) // registers it as `graft`
   *   spark.sql("SELECT count(*) FROM graft.docs.docs_1000000_16")
   *   spark.sql("SELECT lang, count(*) FROM graft.docs.docs_100000 GROUP BY lang")
   * }}}

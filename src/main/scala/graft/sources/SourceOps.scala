@@ -96,34 +96,21 @@ object SourceOps {
     GROUP BY a.source
     ORDER BY source"""
 
-  /** Idempotent catalog registration shared by every declared key here
-    * (Verify/Bench sessions don't pre-configure it; a user session may
-    * have — never overwrite). ONE copy: the class name must not drift
-    * across call sites. */
-  private def ensureCatalog(s: SparkSession): Unit =
-    if (s.conf.getOption("spark.sql.catalog.graft").isEmpty)
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // The fixture dir is unused: the table is GENERATED (deterministic,
     // dir-independent), which is the point — the oracle replays the
-    // generator, not a parquet file. Catalog registration is idempotent
-    // (the GraftSession.install contract); Verify/Bench sessions don't
-    // pre-configure it.
-    "src_docs_pushdown" -> ((s, _) => {
-      ensureCatalog(s)
-      s.sql(selectSql(s"graft.docs.docs_${DocsRows}_$DocsParts"))
-    }),
+    // generator, not a parquet file. The `graft` catalog resolves through
+    // the session's conf, which [[graft.GraftSession]] sets.
+    "src_docs_pushdown" -> ((s, _) =>
+      s.sql(selectSql(s"graft.docs.docs_${DocsRows}_$DocsParts"))),
 
     // The grouped PARTIAL aggregate pushdown under the hash gate (r18
     // cont.) — see groupSql's scaladoc for the three-mode contract
     // boundary this completes. SourceSpec pins the DocsGroupAggScan plan
     // (pushed span in the scan description, final merge aggregate above,
     // scan output bounded by partitions x langs, never the span).
-    "src_docs_group_agg" -> ((s, _) => {
-      ensureCatalog(s)
-      s.sql(groupSql(s"graft.docs.docs_${DocsRows}_$DocsParts"))
-    }),
+    "src_docs_group_agg" -> ((s, _) =>
+      s.sql(groupSql(s"graft.docs.docs_${DocsRows}_$DocsParts"))),
 
     // Storage-partitioned join under the hash gate (r18, item-6 pair
     // with src_docs_pushdown): two bucket-layout catalog tables joined
@@ -131,20 +118,17 @@ object SourceOps {
     // Spark honors the scans' KeyGroupedPartitioning instead of
     // shuffling 2 corpus-sized sides (the Iceberg-style shuffle-free
     // fact-fact join; at 100 TB this elides the two largest exchanges a
-    // warehouse pays). The v2.bucketing conf is required for Spark to
-    // trust reported partitioning; setting it is harmless session-wide
-    // (it only affects scans that REPORT a KeyGroupedPartitioning —
-    // here, only graft-docs bucket tables). SourceSpec pins the
-    // zero-exchange subtree; the oracle replays both sides from ONE
-    // generated relation (the b side is the same generator over the
-    // nested [0, 1500) span).
-    "src_docs_spj" -> ((s, _) => {
-      ensureCatalog(s)
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    // warehouse pays). Spark trusts reported partitioning only under
+    // `spark.sql.sources.v2.bucketing.enabled`, which [[graft.GraftSession]]
+    // turns on for the whole session (it only affects scans that REPORT
+    // a KeyGroupedPartitioning — here, only graft-docs bucket tables).
+    // SourceSpec pins the zero-exchange subtree; the oracle replays both
+    // sides from ONE generated relation (the b side is the same generator
+    // over the nested [0, 1500) span).
+    "src_docs_spj" -> ((s, _) =>
       s.sql(spjSql("/*+ MERGE(b) */",
         s"graft.docs.docs_${SpjRowsA}_${SpjParts}_bucket",
-        s"graft.docs.docs_${SpjRowsB}_${SpjParts}_bucket"))
-    }))
+        s"graft.docs.docs_${SpjRowsB}_${SpjParts}_bucket"))))
 
   def oracles: Map[String, String] = Map(
     "src_docs_pushdown" ->

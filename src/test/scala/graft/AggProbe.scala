@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Manual decomposition probe for the range-partitioned cumulative agg
@@ -13,11 +13,7 @@ object AggProbe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val passes = if (args.length > 1) args(1).toInt else 5
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(32)
     spark.sparkContext.setLogLevel("WARN")
     val nParts = 32
 

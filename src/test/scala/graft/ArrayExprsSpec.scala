@@ -62,14 +62,10 @@ class ArrayExprsSpec extends SparkSpec {
   }
 
   test("GraftExtensions registers the expressions as SQL functions") {
-    val spark0 = spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    try {
+    withOwnSession(org.apache.spark.sql.SparkSession.builder()
+        .master("local[2]")
+        .withExtensions(new graft.GraftExtensions)
+        .getOrCreate()) { s2 =>
       val c = s2.sql("SELECT float_cosine(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
         "array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT))) AS c").collect()(0).getDouble(0)
       assert(math.abs(c - 1.0) < 1e-12)
@@ -86,9 +82,6 @@ class ArrayExprsSpec extends SparkSpec {
         "SELECT sim_hash(array(1L, 2L), 32) = sim_hash(array(1L, 2L), 32) AS eq")
         .collect()(0).getBoolean(0)
       assert(sh)
-    } finally {
-      org.apache.spark.sql.SparkSession.setDefaultSession(spark0)
-      org.apache.spark.sql.SparkSession.setActiveSession(spark0)
     }
   }
 

@@ -21,11 +21,9 @@ class BucketingSpec extends SparkSpec {
       .write.mode("overwrite")
       .bucketBy(8, "c_custkey").sortBy("c_custkey")
       .saveAsTable("customer_b")
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // the fixture dim is broadcast-sized; disable broadcast so the plan
-      // must rely on the bucket distribution (the 100 TB case)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // the fixture dim is broadcast-sized; disable broadcast so the plan
+    // must rely on the bucket distribution (the 100 TB case)
+    try withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("orders_b")
         .join(spark.table("customer_b"), col("o_custkey") === col("c_custkey"))
         .select("o_orderkey", "c_name", "o_totalprice")
@@ -45,7 +43,6 @@ class BucketingSpec extends SparkSpec {
         s"plain SMJ should shuffle both sides:\n$plainPlan")
       assert(joined.count() === plain.count())
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS orders_b")
       spark.sql("DROP TABLE IF EXISTS customer_b")
     }

@@ -345,15 +345,12 @@ class DedupSpec extends SparkSpec {
     // force the size-conditional label broadcast off (threshold -1 is
     // Spark's "never broadcast") and pin that the shuffle-join rounds
     // converge to the same labeling
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    try {
-      spark.conf.set(key, "-1")
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val (edges, nodes) = ccFixture()
       val iter = DedupOps.iterativeCC(edges, nodes).orderBy("id")
       val local = DedupOps.localCC(edges).orderBy("id")
       assert(iter.collect().toSeq === local.collect().toSeq)
-    } finally spark.conf.set(key, prev)
+    }
   }
 
   test("dedup_embed returns the top-100 pairs ordered by similarity") {

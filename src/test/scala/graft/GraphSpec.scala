@@ -16,12 +16,10 @@ class GraphSpec extends SparkSpec {
     import graft.operators.SimilarityOps
     // baseline under the session default (fixture fits → broadcast path)
     val expected = q("graph_degree").collect().toSeq
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     // the shared edge materialization memoizes per (session, dir) — evict
     // so the -1-threshold run re-derives through the gated front door
     SimilarityOps.evictSharedEdges(spark)
-    try {
+    try withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // 1. the derivation the graph family shares must NOT plan the
       //    executeCollect-broadcast operator when broadcasting is off
       val derivation = SimilarityOps
@@ -32,7 +30,6 @@ class GraphSpec extends SparkSpec {
       // 2. end-to-end: the grid-derived graph_degree is row-identical
       assert(q("graph_degree").collect().toSeq == expected)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       // drop the grid-derived materialization so later suites/tests
       // re-derive under their own conf
       SimilarityOps.evictSharedEdges(spark)
@@ -46,11 +43,10 @@ class GraphSpec extends SparkSpec {
     def scratchDirs(prefix: String): Seq[String] =
       Option(root.toFile.listFiles()).toSeq.flatten
         .map(_.getName).filter(_.startsWith(prefix))
-    spark.conf.set(SessionTableMemo.ScratchDirKey, root.toString)
     // any edge table memoized under the DEFAULT root must not satisfy
     // the conf'd run
     SimilarityOps.evictSharedEdges(spark)
-    try {
+    try withConfs(SessionTableMemo.ScratchDirKey -> root.toString) {
       assert(SimilarityOps.similarEdges(spark, SfDir).count() > 0)
       assert(scratchDirs("graft_sim_edges_").nonEmpty,
         s"materialization did not land under the configured root $root")
@@ -66,10 +62,7 @@ class GraphSpec extends SparkSpec {
         "evictSharedEdges left an orphaned edge scratch directory behind")
       assert(scratchDirs("graft_pivot_bfs_").isEmpty,
         "evictSharedEdges left an orphaned BFS scratch directory behind")
-    } finally {
-      spark.conf.unset(SessionTableMemo.ScratchDirKey)
-      SimilarityOps.evictSharedEdges(spark)
-    }
+    } finally SimilarityOps.evictSharedEdges(spark)
   }
 
   test("second centrality consumer launches no edge-symmetrization or " +

@@ -43,9 +43,7 @@ class GridPairwiseSpec extends SparkSpec {
       .queryExecution.explainString(ExplainMode.fromString("simple"))
     assert(small.contains("SelfPairwise"), small)
     // force "never broadcast" → the grid plan, same rows
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val forced = Pairwise.cosineAuto(embeddings, 30.0)
       val plan = forced.queryExecution
         .explainString(ExplainMode.fromString("simple"))
@@ -57,7 +55,7 @@ class GridPairwiseSpec extends SparkSpec {
         .filter(col("similitud") >= 30.0)
       assert(forced.exceptAll(viaSelf).count() === 0)
       assert(viaSelf.exceptAll(forced).count() === 0)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("Pairwise.jaccardAuto grid branch matches the broadcast operator") {
@@ -66,9 +64,7 @@ class GridPairwiseSpec extends SparkSpec {
       .select(col("doc_id"),
         array_sort(transform(array_distinct(split(col("text"), " ")),
           t => xxhash64(t))).as("th"))
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val grid = Pairwise.jaccardAuto(th, 0.9)
         .select(col("src"), col("dst"), round(col("score"), 4).as("j"))
         .filter(col("j") >= 0.9)
@@ -77,7 +73,7 @@ class GridPairwiseSpec extends SparkSpec {
         .filter(col("j") >= 0.9)
       assert(grid.exceptAll(bcast).count() === 0)
       assert(bcast.exceptAll(grid).count() === 0)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("shuffle volume is n·(B+1) rows — O(n·B), never the O(n²) pair count") {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.ArrayExprs
 import graft.operators.SimilarityOps
-import graft.plans.{PairwiseRewrite, SelfPairwiseNode}
+import graft.plans.SelfPairwiseNode
 
 /** Pins the [[graft.plans.PairwiseRewrite]] optimizer rule: the declarative
   * self-join + cosine + threshold shape must plan through the fused
@@ -15,7 +15,6 @@ import graft.plans.{PairwiseRewrite, SelfPairwiseNode}
 class PairwiseRewriteSpec extends SparkSpec {
 
   private def declarative(threshold: Double): DataFrame = {
-    PairwiseRewrite.install(spark)
     val e = Tables.embeddings(spark, SfDir).select(col("vec_id"), col("embedding"))
     e.alias("a").join(e.alias("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
@@ -45,7 +44,6 @@ class PairwiseRewriteSpec extends SparkSpec {
   }
 
   test("all-ordered-pairs (=!=) shape rewrites and matches the operator API") {
-    PairwiseRewrite.install(spark)
     val e = Tables.embeddings(spark, SfDir).select(col("vec_id"), col("embedding"))
     val df = e.alias("a").join(e.alias("b"), col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
@@ -67,9 +65,7 @@ class PairwiseRewriteSpec extends SparkSpec {
     // CartesianProduct — it must become the shuffle-distributed grid join
     val expected = declarative(SimilarityOps.EdgeThreshold)
       .orderBy("src", "dst").collect().toSeq
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = declarative(SimilarityOps.EdgeThreshold)
       assert(!hasNode(df), df.queryExecution.optimizedPlan.toString)
       val phys = df.queryExecution.executedPlan.toString
@@ -77,15 +73,12 @@ class PairwiseRewriteSpec extends SparkSpec {
       assert(!phys.contains("CartesianProduct"), phys)
       assert(phys.contains("ShuffledHashJoin") || phys.contains("SortMergeJoin"), phys)
       assert(df.orderBy("src", "dst").collect().toSeq == expected)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("all-ordered-pairs shape past the budget -> no rewrite (grid has no " +
       "ordered-pair twin)") {
-    PairwiseRewrite.install(spark)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val e = Tables.embeddings(spark, SfDir).select(col("vec_id"), col("embedding"))
       val df = e.alias("a").join(e.alias("b"), col("a.vec_id") =!= col("b.vec_id"))
         .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
@@ -93,11 +86,10 @@ class PairwiseRewriteSpec extends SparkSpec {
             .as("similitud"))
         .filter(col("similitud") >= 40.0)
       assert(!hasNode(df))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("no score filter -> no rewrite (NULL-score rows must be kept)") {
-    PairwiseRewrite.install(spark)
     val e = Tables.embeddings(spark, SfDir).select(col("vec_id"), col("embedding"))
     val df = e.alias("a").join(e.alias("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
@@ -106,7 +98,6 @@ class PairwiseRewriteSpec extends SparkSpec {
   }
 
   test("projection of non-id/score columns -> no rewrite") {
-    PairwiseRewrite.install(spark)
     val e = Tables.embeddings(spark, SfDir).select(col("vec_id"), col("embedding"))
     val df = e.alias("a").join(e.alias("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("src"), col("a.embedding").as("vec"),
@@ -117,7 +108,6 @@ class PairwiseRewriteSpec extends SparkSpec {
   }
 
   test("non-self join (different relations) -> no rewrite") {
-    PairwiseRewrite.install(spark)
     val e = Tables.embeddings(spark, SfDir).select(col("vec_id"), col("embedding"))
     val half = e.filter(col("vec_id") < 250)
     val df = e.alias("a").join(half.alias("b"), col("a.vec_id") < col("b.vec_id"))

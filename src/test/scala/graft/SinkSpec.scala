@@ -245,12 +245,10 @@ class SinkSpec extends SparkSpec {
 
       // backfill ONE day with a single sentinel row; static overwrite
       // would wipe every other partition — dynamic must keep them
-      val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-      try {
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      withConfs("spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
         events.filter(col("day") === target).limit(1)
           .write.mode("overwrite").partitionBy("day").parquet(out)
-      } finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+      }
 
       val after = spark.read.parquet(out)
       val untouched = after.filter(col("day") =!= target).count()

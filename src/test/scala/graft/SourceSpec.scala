@@ -293,7 +293,6 @@ class SourceSpec extends SparkSpec {
   }
 
   test("USE graft gives SHOW TABLES a default namespace to resolve") {
-    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     val prev = spark.catalog.currentCatalog()
     try {
       spark.sql("USE graft")
@@ -303,7 +302,6 @@ class SourceSpec extends SparkSpec {
   }
 
   test("bucket(0, id) raises the contract error, not a raw divide-by-zero") {
-    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     val e = intercept[Exception] {
       spark.sql("SELECT graft.docs.bucket(0, 5L)").collect()
     }
@@ -314,7 +312,6 @@ class SourceSpec extends SparkSpec {
   }
 
   test("catalog plugin resolves generated tables to pure SQL with pushdown intact") {
-    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     // name IS the definition: docs_<rows>[_<partitions>]
     val n = spark.sql("SELECT count(*) AS n FROM graft.docs.docs_5000_4").head.getLong(0)
     assert(n === 5000)
@@ -345,8 +342,6 @@ class SourceSpec extends SparkSpec {
     // three-way agreement: reader synthesis, MetadataColumn, and the
     // FunctionCatalog's bucket() all derive from ONE floorMod — through
     // pure catalog SQL
-    if (spark.conf.getOption("spark.sql.catalog.graft").isEmpty)
-      spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     val bad = spark.sql(
       """SELECT count(*) AS n FROM graft.docs.docs_100_4
          WHERE _gen_bucket <> graft.docs.bucket(4, doc_id)""")
@@ -356,8 +351,6 @@ class SourceSpec extends SparkSpec {
 
   test("catalog scalar function lang_of: SQL-invocable via the magic " +
       "method, agrees with the generator and the table column") {
-    if (spark.conf.getOption("spark.sql.catalog.graft").isEmpty)
-      spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     // literal call matches the generator directly
     assert(spark.sql("SELECT graft.docs.lang_of(42L) AS l")
       .collect().head.getString(0) === graft.sources.DocsSource.langOf(42L))
@@ -483,8 +476,6 @@ class SourceSpec extends SparkSpec {
     // the final adaptive plan is inspected after execution
     for (aqe <- Seq("false", "true")) {
       withConfs(
-        "spark.sql.catalog.graft" -> "graft.sources.GraftCatalog",
-        "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.adaptive.enabled" -> aqe) {
         val a = bucketed.select(col("doc_id"), col("n_chars"))

@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession fixture for all suites. Golden assertions run
-  * on the smallest fixture (sf0.001) to keep `sbt test` fast. */
+/** Shared local SparkSession fixture for all suites, built the way users
+  * get one ([[GraftSession.local]]). Golden assertions run on the smallest
+  * fixture (sf0.001) to keep `sbt test` fast. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val SfDir = "/root/testdata/sf0.001"
@@ -24,6 +25,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** Run `body` on a session built by `build` while the suite fixture is
+    * neither active nor default (so `getOrCreate` makes a NEW session on
+    * the shared SparkContext), then restore the fixture. */
+  def withOwnSession(build: => SparkSession)(body: SparkSession => Unit): Unit = {
+    val spark0 = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try body(build)
+    finally {
+      SparkSession.setDefaultSession(spark0)
+      SparkSession.setActiveSession(spark0)
+    }
+  }
+
   override def afterAll(): Unit = super.afterAll()
 }
 
@@ -32,11 +47,5 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 object SlowTest extends org.scalatest.Tag("graft.SlowTest")
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = GraftSession.local(4, "graft-test")
 }

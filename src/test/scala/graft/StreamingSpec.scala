@@ -201,35 +201,29 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     // the v2 arbitrary-state API requires the RocksDB state store
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[EventStreams.Event]
-    val query = EventStreams.runningTotals(input.toDS())
-      .writeStream.format("memory").queryName("running_totals")
-      .outputMode("update").start()
-    try {
-      input.addData(
-        EventStreams.Event(1L, ts(0), 1.0),
-        EventStreams.Event(1L, ts(1), 2.0),
-        EventStreams.Event(2L, ts(2), 10.0))
-      query.processAllAvailable()
-      input.addData(EventStreams.Event(1L, ts(3), 4.0))
-      query.processAllAvailable()
-      // last emitted totals per user reflect ALL prior batches
-      val last = spark.table("running_totals")
-        .groupBy("user_id")
-        .agg(max(struct(col("n_events"), col("sum_value"))).as("m"))
-        .select(col("user_id"), col("m.n_events"), col("m.sum_value"))
-        .collect().map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2)))).toMap
-      assert(last(1L) === ((3L, 7.0)), s"user 1 totals wrong: $last")
-      assert(last(2L) === ((1L, 10.0)), s"user 2 totals wrong: $last")
-    } finally {
-      query.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withConfs("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      val input = MemoryStream[EventStreams.Event]
+      val query = EventStreams.runningTotals(input.toDS())
+        .writeStream.format("memory").queryName("running_totals")
+        .outputMode("update").start()
+      try {
+        input.addData(
+          EventStreams.Event(1L, ts(0), 1.0),
+          EventStreams.Event(1L, ts(1), 2.0),
+          EventStreams.Event(2L, ts(2), 10.0))
+        query.processAllAvailable()
+        input.addData(EventStreams.Event(1L, ts(3), 4.0))
+        query.processAllAvailable()
+        // last emitted totals per user reflect ALL prior batches
+        val last = spark.table("running_totals")
+          .groupBy("user_id")
+          .agg(max(struct(col("n_events"), col("sum_value"))).as("m"))
+          .select(col("user_id"), col("m.n_events"), col("m.sum_value"))
+          .collect().map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2)))).toMap
+        assert(last(1L) === ((3L, 7.0)), s"user 1 totals wrong: $last")
+        assert(last(2L) === ((1L, 10.0)), s"user 2 totals wrong: $last")
+      } finally query.stop()
     }
   }
 
