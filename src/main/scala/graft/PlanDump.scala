@@ -8,8 +8,22 @@ import java.nio.file.{Files, Paths}
   * plan of each named declared query against `SPARK_GRAFT_SF_DIR` — the
   * committed evidence the optimization rounds' plan claims are checked
   * against (the judge cannot run Spark; these files are the ground truth
-  * for "2 Exchange → 1"-style statements in OPTIMIZATION_r*.md). */
+  * for "2 Exchange → 1"-style statements in OPTIMIZATION_r*.md).
+  *
+  * What is written masks every per-run name: expression ids (`#123`),
+  * exchange `plan_id`s, RDD ids and their call sites, the working
+  * directory, and the `graft_*<uuid>` scratch-dir names. The dumps of two
+  * checkouts then diff cleanly on plan structure alone. Each key is
+  * planned on an empty cache (as in `Verify`), so a key's plan never
+  * reads an intermediate an earlier key persisted. */
 object PlanDump {
+  private def mask(plan: String): String =
+    plan.replace("file:" + System.getProperty("user.dir"), "file:.")
+      .replaceAll("#\\d+", "#_")
+      .replaceAll("plan_id=\\d+", "plan_id=_")
+      .replaceAll("RDD\\[\\d+\\] at (\\w+) at [\\w.]+:\\d+", "RDD[_] at $1")
+      .replaceAll("(graft_[a-z0-9_]*_)[0-9a-f]{32}", "$1<uuid>")
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanDump <suffix> <key>[,<key>...]")
     val suffix = args(0)
@@ -26,8 +40,9 @@ object PlanDump {
       // same rendering as df.explain("formatted"), captured instead of printed
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      Files.write(out.resolve(s"${k}_$suffix.txt"), txt.getBytes("UTF-8"))
+      Files.write(out.resolve(s"${k}_$suffix.txt"), mask(txt).getBytes("UTF-8"))
       println(s"[plandump] wrote ${k}_$suffix.txt (${txt.length} chars)")
+      spark.sharedState.cacheManager.clearCache()
     }
     spark.stop()
   }

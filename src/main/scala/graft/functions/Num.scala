@@ -38,4 +38,15 @@ object Num {
     val p = math.pow(10, d)
     floor(c * lit(p) + lit(0.5)) / lit(p)
   }
+
+  /** Exact fold of a numeric column as DOUBLE: summed as DECIMAL(28,10),
+    * so the total does not depend on row or partition order and matches
+    * the oracle's DECIMAL fold bit for bit. */
+  def dsum(c: Column): Column = sum(c.cast("decimal(28,10)")).cast("double")
+
+  /** Exact fold of the integer product a·b as DOUBLE: the factors widen to
+    * DECIMAL(19,0), so the products fold as DECIMAL(38,0) and never
+    * overflow a BIGINT (a count product does once the counts pass ~3e9). */
+  def psum(a: Column, b: Column): Column =
+    sum(a.cast("decimal(19,0)") * b.cast("decimal(19,0)")).cast("double")
 }

@@ -47,11 +47,10 @@ object AggOps {
   }
 
   /** Exact decimal fold of a double column, returned as DOUBLE. */
-  private def dsum(c: String): org.apache.spark.sql.Column =
-    sum(col(c).cast("decimal(28,10)")).cast("double")
+  private def dsum(c: String): Column = Num.dsum(col(c))
 
   /** `agg_kendall_tau`'s (quantity, discount) cell count per (session,
-    * dir) — the ProvidenciasOps.nodeCountMemo class; see the usage
+    * dir) — the Graph.nodeCount class; see the usage
     * comment at the key. */
   private val kendallCellCountMemo = new SessionMemo[String, java.lang.Long]
 
@@ -86,8 +85,8 @@ object AggOps {
     * over ln(1+v−mn), deterministic and monotone, immune to outliers —
     * and rejected it on evidence: on these value domains it concentrates
     * the bulk into fewer cells and costs +6–15 % (weighted_median),
-    * +23–29 % (gini), +31–42 % (lorenz) at sf0.1 (AggProbe, 7-pass
-    * interleaved, outputs bit-identical). Approx-quantile boundaries
+    * +23–29 % (gini), +31–42 % (lorenz) at sf0.1 (7 interleaved passes,
+    * outputs bit-identical). Approx-quantile boundaries
     * are excluded by the determinism argument above. So the map stays
     * linear, with this boundary: it is exact at ANY skew (only slower
     * in the degenerate case), and a deployment on heavy-tailed domains
@@ -229,7 +228,6 @@ object AggOps {
     "agg_corr" -> ((s, dir) => {
       val x = col("l_quantity"); val y = col("l_extendedprice")
       val d = col("l_discount")
-      def dsum(c: Column) = sum(c.cast("decimal(28,10)")).cast("double")
       def corr2(sxy: Column, sx: Column, sy: Column,
                 sxx: Column, syy: Column): Column = Num.pin(
         (col("n") * sxy - sx * sy) /
@@ -237,9 +235,9 @@ object AggOps {
       Tables.lineitem(s, dir)
         .groupBy("l_returnflag")
         .agg(count(lit(1)).cast("double").as("n"),
-          dsum(x).as("sx"), dsum(y).as("sy"), dsum(d).as("sd"),
-          dsum(x * y).as("sxy"), dsum(d * y).as("sdy"),
-          dsum(x * x).as("sxx"), dsum(y * y).as("syy"), dsum(d * d).as("sdd"))
+          Num.dsum(x).as("sx"), Num.dsum(y).as("sy"), Num.dsum(d).as("sd"),
+          Num.dsum(x * y).as("sxy"), Num.dsum(d * y).as("sdy"),
+          Num.dsum(x * x).as("sxx"), Num.dsum(y * y).as("syy"), Num.dsum(d * d).as("sdd"))
         .select(col("l_returnflag"), col("n").cast("long").as("n"),
           corr2(col("sxy"), col("sx"), col("sy"), col("sxx"), col("syy"))
             .as("corr_qty_price"),
@@ -260,12 +258,11 @@ object AggOps {
     // aggregation shape as `agg_corr`.
     "agg_skew_kurt" -> ((s, dir) => {
       val x = col("l_quantity")
-      def dsum(c: Column) = sum(c.cast("decimal(28,10)")).cast("double")
       Tables.lineitem(s, dir)
         .groupBy("l_returnflag")
         .agg(count(lit(1)).cast("double").as("n"),
-          dsum(x).as("s1"), dsum(x * x).as("s2"),
-          dsum(x * x * x).as("s3"), dsum(x * x * x * x).as("s4"))
+          Num.dsum(x).as("s1"), Num.dsum(x * x).as("s2"),
+          Num.dsum(x * x * x).as("s3"), Num.dsum(x * x * x * x).as("s4"))
         .withColumn("mu", col("s1") / col("n"))
         .withColumn("m2", col("s2") / col("n") - col("mu") * col("mu"))
         .withColumn("m3", col("s3") / col("n")
@@ -312,7 +309,6 @@ object AggOps {
     "agg_regression_multi" -> ((s, dir) => {
       val x = col("l_quantity"); val d = col("l_discount")
       val y = col("l_extendedprice")
-      def dsum(c: Column) = sum(c.cast("decimal(28,10)")).cast("double")
       def det3(a: Column, b: Column, c: Column,
                p: Column, q: Column, r: Column,
                u: Column, v: Column, w: Column): Column =
@@ -320,9 +316,9 @@ object AggOps {
       Tables.lineitem(s, dir)
         .groupBy("l_returnflag")
         .agg(count(lit(1)).cast("double").as("n"),
-          dsum(x).as("sx"), dsum(d).as("sd"), dsum(y).as("sy"),
-          dsum(x * x).as("sxx"), dsum(x * d).as("sxd"),
-          dsum(d * d).as("sdd"), dsum(x * y).as("sxy"), dsum(d * y).as("sdy"))
+          Num.dsum(x).as("sx"), Num.dsum(d).as("sd"), Num.dsum(y).as("sy"),
+          Num.dsum(x * x).as("sxx"), Num.dsum(x * d).as("sxd"),
+          Num.dsum(d * d).as("sdd"), Num.dsum(x * y).as("sxy"), Num.dsum(d * y).as("sdy"))
         .withColumn("det", det3(
           col("n"), col("sx"), col("sd"),
           col("sx"), col("sxx"), col("sxd"),
@@ -542,7 +538,7 @@ object AggOps {
       val cells = Tables.lineitem(s, dir)
         .groupBy(col("l_quantity").as("x"), col("l_discount").as("y"))
         .agg(count(lit(1)).as("c")).persist()
-      // memoized per (session, dir) — the nodeCountMemo class (r18 opt):
+      // memoized per (session, dir) — the Graph.nodeCount class:
       // the cell count only sizes the broadcast hint and is a pure
       // function of the immutable fixture; the query's own first action
       // still materializes the persisted cells it consumes
@@ -720,12 +716,13 @@ object AggOps {
     // Identical output to the naive one-window form the oracle replays:
     // weights fold as exact DECIMAL everywhere, so offsets, cell sums,
     // and the ≥ total/2 comparisons are order-independent and bit-equal
-    // cross-engine (AggProbe pins collect-equality against the r16 form
-    // at sf0.1). Windows never see more than |groups|×WmBuckets cells or
-    // one bucket's values — the single-task collapse the r16 form
-    // guarded against stays impossible unless one bucket degenerately
-    // holds the whole domain (a near-constant column — in which case the
-    // relation is dictionary-sized and trivially small anyway).
+    // cross-engine (the oracle pins the values, AggSpec the defining
+    // half-mass property). Windows never see more than
+    // |groups|×WmBuckets cells or one bucket's values — the single-task
+    // collapse the r16 form guarded against stays impossible unless one
+    // bucket degenerately holds the whole domain (a near-constant column
+    // — in which case the relation is dictionary-sized and trivially
+    // small anyway).
     "agg_weighted_median" -> ((s, dir) => {
       val li = Tables.lineitem(s, dir).select(col("l_returnflag"),
         col("l_extendedprice").as("v"),
@@ -987,8 +984,8 @@ object AggOps {
     // folds in the SAME closed form (c·(cb+1) + c·(c−1)/2), cb is the
     // identical integer by bucket-map monotonicity, and value sums ride
     // the same DECIMAL(18,2)×DECIMAL(18,0) exact products — so both
-    // engines divide identical integers/decimals at the end (AggProbe
-    // pins collect-equality against the r16 form at sf0.1).
+    // engines divide identical integers/decimals at the end (the oracle
+    // and AggSpec's naive sorted-rank replay pin the values).
     "agg_gini" -> ((s, dir) => {
       val byVal = Tables.orders(s, dir)
         .groupBy(col("o_orderpriority").as("g"), col("o_totalprice").as("v"))
@@ -1097,8 +1094,8 @@ object AggOps {
     // naive global cumsum assigns; per-decile cum_orders/cumv are then
     // running EXACT-DECIMAL sums over the ≤10-row decile table — equal
     // to the naive form's max-of-cumulative because deciles partition
-    // the value order contiguously (AggProbe pins collect-equality
-    // against the r16 form at sf0.1).
+    // the value order contiguously (the oracle and AggSpec's decile
+    // replay pin the values).
     "agg_lorenz" -> ((s, dir) => {
       val tot = Window.partitionBy()
       val byVal = Tables.orders(s, dir)

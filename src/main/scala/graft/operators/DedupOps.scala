@@ -1035,19 +1035,15 @@ object DedupOps {
       val uniq = c.uniq()
       val nodes = c.gidMap.select(col("gid"))
       // No coalesce here: with no exchange between SelfPairwise and the
-      // persist, a coalesce(8) propagates UP the plan and runs the
-      // quadratic pair scan itself on 8 tasks (measured 7.6 s vs 2 s at
-      // sf0.1). localCC narrows to one task from the CACHED edge blocks,
-      // which is free; the iterative path reads the cache per round.
-      val edges = graft.plans.SelfPairwise(uniq,
-        graft.plans.SelfPairwise.Jaccard, JaccardThreshold - 1e-3, triangular = true)
+      // persist, a coalesce to 8 partitions propagates UP the plan and
+      // runs the quadratic pair scan itself on 8 tasks (measured 7.6 s vs
+      // 2 s at sf0.1). localCC narrows to one task from the CACHED edge
+      // blocks, which is free; the iterative path reads the cache per
+      // round.
+      val edges = Graph.componentEdges(graft.plans.SelfPairwise(uniq,
+          graft.plans.SelfPairwise.Jaccard, JaccardThreshold - 1e-3, triangular = true)
         .select(col("src"), col("dst"), round(col("score"), 4).as("jaccard"))
-        .filter(col("jaccard") >= JaccardThreshold)
-        .select(explode(array(
-          struct(col("src").as("a"), col("dst").as("b")),
-          struct(col("dst").as("a"), col("src").as("b")))).as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"))
-        .union(nodes.select(col("gid").as("a"), col("gid").as("b")))
+        .filter(col("jaccard") >= JaccardThreshold), nodes)
         .persist()
       // The contracted graph is solved by [[localCC]] (one union-find
       // task) when it is small — the measured common case: contraction
@@ -1059,9 +1055,7 @@ object DedupOps {
       // cache while edges is still persisted, so neither the count nor
       // the final join re-derives the pair scan; the caller releases
       // both handles once the parquet write has forced the plan.
-      val labels =
-        (if (edges.count() <= LocalCCMaxEdges) localCC(edges)
-         else iterativeCC(edges, nodes)).persist()
+      val labels = Graph.components(edges, nodes).persist()
       // same size condition as the loop's joins: labels are
       // node-cardinality, so at broadcast-busting scale this final
       // label-application join must shuffle too (the count is cheap —

@@ -479,21 +479,16 @@ object PipelineOps {
     // double at the end, so the whole analysis is two aggregations
     // regardless of event volume.
     "ml_cuped" -> ((s, dir) => {
-      def dsum(c: Column) = sum(c.cast("decimal(28,10)")).cast("double")
       val perUser = Tables.events(s, dir)
         .filter(col("event_type") === "click")
         .groupBy("user_id")
         .agg(sum(when(dayofmonth(col("ts")) <= 15, 1L).otherwise(0L)).as("x"),
           sum(when(dayofmonth(col("ts")) > 15, 1L).otherwise(0L)).as("y"))
-      // count products fold as DECIMAL(19,0)×(19,0) → (38,0), never LONG
-      // (x·y in BIGINT overflows once per-user counts pass ~3e9)
-      def psum(a: Column, b: Column) =
-        sum(a.cast("decimal(19,0)") * b.cast("decimal(19,0)")).cast("double")
       val st = perUser.agg(count(lit(1)).cast("double").as("n"),
-        dsum(col("x")).as("sx"), dsum(col("y")).as("sy"),
-        psum(col("x"), col("y")).as("sxy"),
-        psum(col("x"), col("x")).as("sxx"),
-        psum(col("y"), col("y")).as("syy"))
+        Num.dsum(col("x")).as("sx"), Num.dsum(col("y")).as("sy"),
+        Num.psum(col("x"), col("y")).as("sxy"),
+        Num.psum(col("x"), col("x")).as("sxx"),
+        Num.psum(col("y"), col("y")).as("syy"))
       val dx = col("n") * col("sxx") - col("sx") * col("sx")
       val dxy = col("n") * col("sxy") - col("sx") * col("sy")
       val dy = col("n") * col("syy") - col("sy") * col("sy")

@@ -30,8 +30,8 @@ object ProvidenciasOps {
 
   /** Peel threshold for `graph_kcore` (see the query's Scaladoc). 3, not
     * 4: the fixture similarity graph's true 4-core is EMPTY at sf0.001
-    * and sf0.01 (measured r10 — 3 fixed peel rounds used to mask this by
-    * stopping early), so k = 4 would gate the converged operator on an
+    * and sf0.01 (a fixed 3-round unroll masks this by stopping early),
+    * so k = 4 would gate the converged operator on an
     * empty table; the 3-core is non-empty at every SF (250 / 316 / 2000
     * nodes) and converges within 10 peels. */
   val KCoreK = 3
@@ -84,13 +84,12 @@ object ProvidenciasOps {
     * [[SimilarityOps.evictSharedEdges]] drops it too. */
   private[operators] val pivotBfsMemo = new SessionTableMemo[Unit]("graft_pivot_bfs_")
 
-  /** Partition count for the materialized symmetrized edge table.
-    * `spark.graft.edgePartitions` (default 8 — sized for the contracted
-    * edge list at fixture scale under local[32]; on a real cluster set
-    * it to O(active cores) so the per-level BFS joins read the edges at
-    * full parallelism). A conf key rather than a literal — r14 verdict
-    * watch item 2 flagged the hard-coded `coalesce(8)` as a local-mode
-    * knob that would under-parallelize a 1000-executor deployment. */
+  /** Partition count for the symmetrized edge list of every graph key
+    * that coalesces it (the pivot-BFS table, `graph_components`,
+    * `graph_kcore`, `graph_pagerank`). `spark.graft.edgePartitions`,
+    * default 8 — sized for the contracted edge list at fixture scale; on
+    * a real cluster set it to O(active cores) so the joins over the edges
+    * run at full parallelism. */
   private[graft] val EdgePartitionsKey = "spark.graft.edgePartitions"
 
   private def edgePartitions(s: SparkSession): Int =
@@ -100,13 +99,6 @@ object ProvidenciasOps {
       require(n > 0, s"$EdgePartitionsKey must be positive, got $n")
       n
     }.getOrElse(8)
-
-  /** Node count per (session, dir) — the embeddings fixture is immutable,
-    * so the count is too; memoizing it keeps a pivot-BFS memo hit at ZERO
-    * jobs (GraphSpec pins that), and it survives an edge evict on purpose
-    * (an edge evict invalidates derived edges/levels, never the corpus).
-    * Every node-count site in this module routes through it. */
-  private val nodeCountMemo = new SessionMemo[String, java.lang.Long]
 
   /** Fixed on-disk schemas of the two memoized scratch tables — passed to
     * the reads so a memo hit never runs a parquet schema-inference job. */
@@ -127,14 +119,10 @@ object ProvidenciasOps {
 
   private[graft] def pivotBfs(s: SparkSession, dir: String)
       : (DataFrame, Long, Array[DataFrame]) = {
-    val nodes = Tables.embeddings(s, dir).select(col("vec_id").as("id"))
-    val nNodes: Long = nodeCountMemo.getOrElseUpdate(s, dir)(nodes.count())
+    val nodes = Graph.nodes(s, dir)
+    val nNodes = Graph.nodeCount(s, dir)
     val (tables, _) = pivotBfsMemo.materialize(s, dir) {
-      val sym = SimilarityOps.similarEdges(s, dir).select(col("src"), col("dst"))
-        .select(explode(array(
-          struct(col("src").as("s"), col("dst").as("d")),
-          struct(col("dst").as("s"), col("src").as("d")))).as("p"))
-        .select(col("p.s").as("s"), col("p.d").as("d"))
+      val sym = Graph.undirected(SimilarityOps.similarEdges(s, dir))
         .coalesce(edgePartitions(s))
       (out => {
         out.write("edges", sym)
@@ -306,20 +294,13 @@ object ProvidenciasOps {
 
   private def derivePropLabels(s: SparkSession, dir: String)
       : (DataFrame, () => Unit) = {
-    val tri = SimilarityOps.similarEdges(s, dir)
-      .select(col("src"), col("dst"))
-    val e = tri.select(explode(array(
-      struct(col("src").as("s"), col("dst").as("d")),
-      struct(col("dst").as("s"), col("src").as("d")))).as("p"))
-      .select(col("p.s").as("s"), col("p.d").as("d"))
-      .persist()
-    val nodes = Tables.embeddings(s, dir).select(col("vec_id").as("id"))
+    val e = Graph.undirected(SimilarityOps.similarEdges(s, dir)).persist()
     // no localCheckpoint: the memo's one-shot parquet write
     // is the only consumer and itself forces the plan — a checkpoint
     // here just duplicated the labels as pinned RDD blocks that outlived
     // the write; e stays cached across the two supersteps and the memo
     // releases it once the write completes
-    (labelPropagate(e, nodes, iters = 2), () => { e.unpersist(); () })
+    (labelPropagate(e, Graph.nodes(s, dir), iters = 2), () => { e.unpersist(); () })
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -429,10 +410,7 @@ object ProvidenciasOps {
     // form re-planned the whole O(n²) SelfPairwise subtree per branch —
     // a Union does not share subtrees — doubling the dominant cost.)
     "graph_degree" -> ((s, dir) =>
-      SimilarityOps.similarEdges(s, dir)
-        .select(explode(array(col("src"), col("dst"))).as("id"))
-        .groupBy("id").agg(count(lit(1)).as("degree"))
-        .orderBy("id")),
+      Graph.degrees(SimilarityOps.similarEdges(s, dir)).orderBy("id")),
 
     // Graph extension: per-node triangle counts over the SIMILAR graph —
     // the clustering-coefficient numerator, i.e. "how clique-ish is this
@@ -446,16 +424,7 @@ object ProvidenciasOps {
       val e = SimilarityOps.similarEdges(s, dir)
         .select(col("src"), col("dst"))
         .persist()
-      // per-role projections (aliases mint fresh exprIds, so the three
-      // self-join sides stay unambiguous)
-      val e1 = e.select(col("src").as("a"), col("dst").as("b"))
-      val e2 = e.select(col("src").as("b2"), col("dst").as("c"))
-      val e3 = e.select(col("src").as("a3"), col("dst").as("c3"))
-      val tri = e1.join(e2, col("b") === col("b2"))
-        .join(e3, col("a") === col("a3") && col("c") === col("c3"))
-        .select(col("a"), col("b"), col("c"))
-      tri.select(explode(array(col("a"), col("b"), col("c"))).as("node_id"))
-        .groupBy("node_id").agg(count(lit(1)).as("n_tri"))
+      Graph.triangleCounts(e).select(col("id").as("node_id"), col("n_tri"))
         .orderBy("node_id")
     }),
 
@@ -470,20 +439,9 @@ object ProvidenciasOps {
       val e = SimilarityOps.similarEdges(s, dir)
         .select(col("src"), col("dst"))
         .persist()
-      val deg = e.select(explode(array(col("src"), col("dst"))).as("node_id"))
-        .groupBy("node_id").agg(count(lit(1)).as("degree"))
-      val e1 = e.select(col("src").as("a"), col("dst").as("b"))
-      val e2 = e.select(col("src").as("b2"), col("dst").as("c"))
-      val e3 = e.select(col("src").as("a3"), col("dst").as("c3"))
-      val tri = e1.join(e2, col("b") === col("b2"))
-        .join(e3, col("a") === col("a3") && col("c") === col("c3"))
-        .select(col("a"), col("b"), col("c"))
-      val triPerNode = tri
-        .select(explode(array(col("a"), col("b"), col("c"))).as("node_id"))
-        .groupBy("node_id").agg(count(lit(1)).as("n_tri"))
-      deg.filter(col("degree") >= 2)
-        .join(triPerNode, Seq("node_id"), "left")
-        .select(col("node_id"), col("degree"),
+      Graph.degrees(e).filter(col("degree") >= 2)
+        .join(Graph.triangleCounts(e), Seq("id"), "left")
+        .select(col("id").as("node_id"), col("degree"),
           coalesce(col("n_tri"), lit(0L)).as("n_tri"),
           round(coalesce(col("n_tri"), lit(0L)) * 2.0 /
             (col("degree") * (col("degree") - 1)), 4).as("coeff"))
@@ -498,21 +456,14 @@ object ProvidenciasOps {
     // the edge list here is the thresholded pairwise output, already
     // tiny relative to the corpus, and singletons ride in as self-loops.
     "graph_components" -> ((s, dir) => {
-      val nodes = Tables.embeddings(s, dir).select(col("vec_id").as("gid"))
-      val edges = SimilarityOps.similarEdges(s, dir)
-        .select(explode(array(
-          struct(col("src").as("a"), col("dst").as("b")),
-          struct(col("dst").as("a"), col("src").as("b")))).as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"))
-        .union(nodes.select(col("gid").as("a"), col("gid").as("b")))
-        .coalesce(8)
+      val nodes = Graph.nodes(s, dir).select(col("id").as("gid"))
+      val edges = Graph.componentEdges(SimilarityOps.similarEdges(s, dir), nodes)
+        .coalesce(edgePartitions(s))
         .persist()
       // eager checkpoint before the unpersist — a lazy labels plan
       // executed afterwards would re-run the pairwise scan uncached in
       // localCC's single task (see the dedup_clusters note)
-      val labels =
-        (if (edges.count() <= DedupOps.LocalCCMaxEdges) DedupOps.localCC(edges)
-         else DedupOps.iterativeCC(edges, nodes)).localCheckpoint()
+      val labels = Graph.components(edges, nodes).localCheckpoint()
       edges.unpersist()
       labels.select(col("id").as("node_id"), col("lbl").as("component_id"))
         .orderBy("node_id")
@@ -530,7 +481,7 @@ object ProvidenciasOps {
     // `graph_pagerank`, label relation stays node-cardinality, so the
     // plan survives any edge count. Iteration count is a plan-construction
     // scalar (fixed 2: synchronous LPA is oscillation-prone, so production
-    // runs cap supersteps rather than loop to convergence). r18 opt: the
+    // runs cap supersteps rather than loop to convergence). The
     // labels derive once per session ([[propLabels]]) and are shared with
     // `graph_modularity` — one community definition, one computation.
     "graph_label_prop" -> ((s, dir) =>
@@ -538,7 +489,7 @@ object ProvidenciasOps {
         .select(col("id").as("node_id"), col("lbl").as("community"))
         .orderBy("node_id")),
 
-    // Newman modularity Q of the label-propagation communities (r11) —
+    // Newman modularity Q of the label-propagation communities —
     // the score that says whether the detected communities are real
     // structure or noise (Q ≈ 0 = no better than random given the
     // degree sequence; this fixture's threshold graph scores near 0,
@@ -553,16 +504,9 @@ object ProvidenciasOps {
     // DECIMAL in a global aggregate — never a window over the
     // community relation, whose cardinality is node-bounded at scale.
     "graph_modularity" -> ((s, dir) => {
-      val tri = SimilarityOps.similarEdges(s, dir)
-        .select(col("src"), col("dst"))
-      val e = tri.select(explode(array(
-        struct(col("src").as("s"), col("dst").as("d")),
-        struct(col("dst").as("s"), col("src").as("d")))).as("p"))
-        .select(col("p.s").as("s"), col("p.d").as("d"))
-        .persist()
-      val nodes = Tables.embeddings(s, dir).select(col("vec_id").as("id"))
-      val nNodes = nodeCountMemo.getOrElseUpdate(s, dir)(nodes.count())
-      // session-shared labels (r18 opt) — one labelPropagate run with
+      val e = Graph.undirected(SimilarityOps.similarEdges(s, dir)).persist()
+      val nNodes = Graph.nodeCount(s, dir)
+      // session-shared labels — one labelPropagate run with
       // graph_label_prop instead of re-running both supersteps here
       val labels = propLabels(s, dir)
       val el = e
@@ -575,15 +519,13 @@ object ProvidenciasOps {
           sum(when(col("cs") === col("cd"), 1L).otherwise(0L)).as("w_in"))
       val tot = e.agg(count(lit(1)).as("ne"))
       byC.crossJoin(broadcast(tot))
-        .withColumn("contrib", graft.functions.Num.pin(
+        .withColumn("contrib", Num.pin(
           col("w_in").cast("double") / col("ne") -
             (col("deg_sum").cast("double") / col("ne")) *
               (col("deg_sum").cast("double") / col("ne")), 10))
         .agg(count(lit(1)).as("n_communities"),
           (max(col("ne")) / 2).cast("long").as("n_edges"),
-          graft.functions.Num.pin(
-            sum(col("contrib").cast("decimal(28,10)")).cast("double"), 6)
-            .as("modularity"))
+          Num.pin(Num.dsum(col("contrib")), 6).as("modularity"))
     }),
 
     // Graph extension: k-core decomposition by iterative peeling TO THE
@@ -593,11 +535,10 @@ object ProvidenciasOps {
     // subgraph of the (persisted, symmetrized) edge list, survivors =
     // deg ≥ k, repeat until the survivor count stops moving (sets only
     // shrink, so an unchanged count IS the fixpoint — one Long per round
-    // decides convergence, the dedup_clusters CC discipline). r10: the
-    // previous fixed 3-round unroll was measured to stop far short of
-    // the fixpoint (a 4th peel dropped 50 of its 63 survivors at
-    // sf0.001; the true core there was empty) — a fixed depth
-    // masquerades as the k-core without being one. Each round is a
+    // decides convergence, the dedup_clusters CC discipline). A fixed
+    // unroll depth would stop short of the fixpoint (a 4th peel drops 50
+    // of the 63 survivors of a 3-round unroll at sf0.001) and pass for
+    // the k-core without being one. Each round is a
     // degree aggregation + two semi-joins against the node-cardinality
     // survivor set (size-conditionally broadcast; past the budget they
     // become shuffle semi-joins, same plan shape — cf. the pagerank
@@ -607,39 +548,26 @@ object ProvidenciasOps {
     // degeneracy ordering depth — a handful in practice (≤ 10 on every
     // fixture SF), capped at 64 like the CC loop's round cap.
     "graph_kcore" -> ((s, dir) => {
-      val tri = SimilarityOps.similarEdges(s, dir)
-        .select(col("src"), col("dst"))
-      val und = tri.select(explode(array(
-          struct(col("src").as("s"), col("dst").as("d")),
-          struct(col("dst").as("s"), col("src").as("d")))).as("e"))
-        .select(col("e.s").as("s"), col("e.d").as("d"))
-        .coalesce(8).persist()
-      def degrees(ed: DataFrame): DataFrame =
-        ed.groupBy("s").agg(count(lit(1)).as("deg"))
+      val und = Graph.undirected(SimilarityOps.similarEdges(s, dir))
+        .coalesce(edgePartitions(s)).persist()
+      // degrees >= k over a directed (s, d) frame
+      def core(ed: DataFrame): DataFrame =
+        ed.groupBy("s").agg(count(lit(1)).as("deg")).filter(col("deg") >= KCoreK)
       // survivor sets are node-cardinality: size-conditional hint (the
       // node universe count bounds every peel round's keep set)
-      val nNodes: Long = nodeCountMemo.getOrElseUpdate(s, dir)(
-        Tables.embeddings(s, dir).count())
+      val nNodes = Graph.nodeCount(s, dir)
       def induce(keep: DataFrame): DataFrame =
         und.join(Bcast.ifFitsRows(keep, nNodes, 16), und("s") === keep("id"), "left_semi")
           .join(Bcast.ifFitsRows(keep, nNodes, 16), und("d") === keep("id"), "left_semi")
-      var keep = degrees(und).filter(col("deg") >= KCoreK)
-        .select(col("s").as("id")).localCheckpoint()
-      var n = keep.count()
-      var converged = false
-      var rounds = 1
-      while (!converged && n > 0 && rounds < 64) {
-        val next = degrees(induce(keep)).filter(col("deg") >= KCoreK)
-          .select(col("s").as("id")).localCheckpoint()
-        val m = next.count()
-        converged = m == n
-        n = m; keep = next; rounds += 1
-      }
+      // the first peel counts as round 1 of the 64-round cap
+      val (keep, _, _) = Graph.peel(
+          core(und).select(col("s").as("id")).localCheckpoint(), 1, 64)(
+        (k, _) => core(induce(k)).select(col("s").as("id")))
       // at convergence the deg >= k filter is a no-op (same count ⇒ same
       // set ⇒ all induced degrees already >= k); it is load-bearing only
       // on a 64-round cap exit, where it keeps the output and the
       // oracle's HAVING clause identical
-      degrees(induce(keep)).filter(col("deg") >= KCoreK)
+      core(induce(keep))
         .select(col("s").as("node_id"), col("deg").as("core_degree"))
         .orderBy("node_id")
     }),
@@ -653,21 +581,16 @@ object ProvidenciasOps {
     // so the plan scales to any edge count. N and the iteration count are
     // plan-construction scalars, not per-row driver work.
     "graph_pagerank" -> ((s, dir) => {
-      val nodes = Tables.embeddings(s, dir).select(col("vec_id").as("id"))
-      val n = nodeCountMemo.getOrElseUpdate(s, dir)(nodes.count()).toDouble
-      val tri = SimilarityOps.similarEdges(s, dir)
-        .select(col("src"), col("dst"))
-      val und = tri.select(explode(array(
-          struct(col("src").as("s"), col("dst").as("d")),
-          struct(col("dst").as("s"), col("src").as("d")))).as("e"))
-        .select(col("e.s").as("s"), col("e.d").as("d"))
+      val nodes = Graph.nodes(s, dir)
+      val n = Graph.nodeCount(s, dir).toDouble
+      val und = Graph.undirected(SimilarityOps.similarEdges(s, dir))
       val outdeg = und.groupBy("s").agg(count(lit(1)).cast("double").as("od"))
       // persisted: re-deriving the edge list would re-run the O(n²)
       // pairwise scan once per iteration term that references it; the
       // coalesce keeps each iteration's joins at a handful of tasks (the
       // contracted edge list is small next to the corpus — at a scale
       // where it isn't, drop it and these become ordinary shuffle joins)
-      val edges = und.join(outdeg, "s").coalesce(8).persist()
+      val edges = und.join(outdeg, "s").coalesce(edgePartitions(s)).persist()
       val ranks0 = nodes.withColumn("rank", lit(1.0 / n))
       // the rank table is |nodes| rows of (id, rank) — broadcast it into
       // the edge join each iteration so the persisted edge list is never
@@ -709,14 +632,9 @@ object ProvidenciasOps {
     // destination groupBy — the pagerank superstep; isolated nodes ride
     // in with score 0 via the final left join against the full id list.
     "graph_eigenvector" -> ((s, dir) => {
-      val nodes = Tables.embeddings(s, dir).select(col("vec_id").as("id"))
-      val nNodes: Long = nodeCountMemo.getOrElseUpdate(s, dir)(nodes.count())
-      val e = SimilarityOps.similarEdges(s, dir).select(col("src"), col("dst"))
-      val und = e.select(explode(array(
-          struct(col("src").as("s"), col("dst").as("d")),
-          struct(col("dst").as("s"), col("src").as("d")))).as("p"))
-        .select(col("p.s").as("s"), col("p.d").as("d"))
-        .persist()
+      val nodes = Graph.nodes(s, dir)
+      val nNodes = Graph.nodeCount(s, dir)
+      val und = Graph.undirected(SimilarityOps.similarEdges(s, dir)).persist()
       val r1 = und.groupBy(col("d").as("id")).agg(count(lit(1)).as("r"))
       def step(r: DataFrame): DataFrame =
         und.join(Bcast.ifFitsRows(
@@ -748,54 +666,37 @@ object ProvidenciasOps {
     // support. At scale each round is shuffle joins on node keys over
     // the (shrinking) edge relation.
     "graph_ktruss" -> ((s, dir) => {
-      // r19 opt (guide §2.4/§3.1): the adjacency sides of the two
-      // common-neighbor joins ride size-conditional broadcasts — the
-      // loop already tracks the live edge count for convergence, so the
-      // hint costs no extra job, and a checkpointed frame has no stats
+      // The adjacency sides of the two common-neighbor joins ride
+      // size-conditional broadcasts — the loop already tracks the live
+      // edge count for convergence, so the hint costs no extra job, and
+      // a checkpointed frame has no stats
       // (without the hint the planner defaults both joins to SMJ: two
       // shuffles + sorts of the edge relation PER ROUND). Past the
       // broadcast budget the rounds degrade to shuffle joins — the
       // graph_eigenvector/label-prop discipline; the per-round groupBy
       // exchange over triangle occurrences remains either way.
-      def support(e: DataFrame, nEdges: Long): DataFrame = {
-        val und = e.select(explode(array(
-            struct(col("src").as("s"), col("dst").as("d")),
-            struct(col("dst").as("s"), col("src").as("d")))).as("p"))
-          .select(col("p.s").as("s"), col("p.d").as("d"))
+      // one peel round: per-edge support, then drop support < k−2
+      def truss(edges: DataFrame, nEdges: Long): DataFrame = {
+        val e = edges.select(col("src"), col("dst"))
+        val und = Graph.undirected(e)
         e.join(Bcast.ifFitsRows(
             und.select(col("s").as("src"), col("d").as("m")), 2 * nEdges, 16), "src")
           .join(Bcast.ifFitsRows(
             und.select(col("s").as("dst"), col("d").as("m")), 2 * nEdges, 16),
             Seq("dst", "m"))
           .groupBy("src", "dst").agg(count(lit(1)).as("support"))
+          .filter(col("support") >= TrussK - 2)
       }
-      var e = SimilarityOps.similarEdges(s, dir)
-        .select(col("src"), col("dst")).localCheckpoint()
-      var n = e.count()
-      var rounds = 0
-      var converged = false
-      // the checkpoint keeps the support column (r19): on a converged
-      // exit next's edge set EQUALS e's, so support(next) == support(e)
-      // — the values the round just computed — and the final
-      // recomputation (two joins + a groupBy) is skipped outright
-      var last: DataFrame = null
-      while (!converged && rounds < TrussMaxRounds && n > 0) {
-        val next = support(e, n).filter(col("support") >= TrussK - 2)
-          .localCheckpoint()
-        val m = next.count()
-        converged = m == n
-        n = m; e = next.select(col("src"), col("dst")); rounds += 1
-        last = next
-      }
-      // at the fixpoint the final support-filter is an identity (same
-      // set ⇒ every support already ≥ k−2), so the converged round's own
-      // support values ARE the in-truss supports; the recomputation is
-      // load-bearing only on a cap (or empty) exit, where it keeps
-      // output and oracle HAVING identical
-      val out =
-        if (converged && last != null) last
-        else support(e, n).filter(col("support") >= TrussK - 2)
-      out.select(col("src"), col("dst"), col("support"))
+      // each round's checkpoint keeps the support column: on a converged
+      // exit the last round's edge set equals its input's, so its support
+      // values ARE the in-truss supports (the final support-filter is an
+      // identity) and the recomputation (two joins + a groupBy) is
+      // skipped; it is load-bearing only on a cap (or empty) exit, where
+      // it keeps output and oracle HAVING identical
+      val (last, n, converged) = Graph.peel(SimilarityOps.similarEdges(s, dir)
+        .select(col("src"), col("dst")).localCheckpoint(), 0, TrussMaxRounds)(truss)
+      (if (converged) last else truss(last, n))
+        .select(col("src"), col("dst"), col("support"))
         .orderBy("src", "dst")
     }),
 
@@ -824,7 +725,7 @@ object ProvidenciasOps {
     // on BOTH engines, so the fixed unroll replays early exhaustion
     // exactly.
     "graph_betweenness" -> ((s, dir) => {
-      val nodes = Tables.embeddings(s, dir).select(col("vec_id").as("id"))
+      val nodes = Graph.nodes(s, dir)
       val (und, nNodes, levels) = pivotBfs(s, dir)
       // backward dependency accumulation over the shortest-path DAG:
       // g(v at depth k) = Σ over DAG successors w at depth k+1 of
@@ -891,7 +792,7 @@ object ProvidenciasOps {
     // shared machinery (see pivotBfs); the per-level relations union to
     // ≤ pivots × nodes rows and collapse in one groupBy.
     "graph_closeness" -> ((s, dir) => {
-      val nodes = Tables.embeddings(s, dir).select(col("vec_id").as("id"))
+      val nodes = Graph.nodes(s, dir)
       val (_, nNodes, levels) = pivotBfs(s, dir)
       val reachedAt = (1 to BetwDepth).map { k =>
         levels(k).select(col("id"), lit(k).as("dist"),
@@ -920,20 +821,10 @@ object ProvidenciasOps {
     // on the middle node — never an all-pairs comparison; degrees ride in
     // on two broadcast joins of the |nodes|-sized degree table.
     "graph_jaccard_neighbors" -> ((s, dir) => {
-      val tri = SimilarityOps.similarEdges(s, dir)
-        .select(col("src"), col("dst"))
-      val und = tri.select(explode(array(
-          struct(col("src").as("s"), col("dst").as("d")),
-          struct(col("dst").as("s"), col("src").as("d")))).as("e"))
-        .select(col("e.s").as("s"), col("e.d").as("d"))
-        .persist()
-      val nNodes: Long = nodeCountMemo.getOrElseUpdate(s, dir)(
-        Tables.embeddings(s, dir).count())
+      val und = Graph.undirected(SimilarityOps.similarEdges(s, dir)).persist()
+      val nNodes = Graph.nodeCount(s, dir)
       val deg = und.groupBy(col("s").as("n")).agg(count(lit(1)).as("deg"))
-      val common = und.select(col("s").as("a"), col("d").as("m"))
-        .join(und.select(col("s").as("m"), col("d").as("b")), "m")
-        .filter(col("a") < col("b"))
-        .groupBy("a", "b").agg(count(lit(1)).as("inter"))
+      val common = Graph.wedges(und).groupBy("a", "b").agg(count(lit(1)).as("inter"))
       common
         .join(Bcast.ifFitsRows(
           deg.select(col("n").as("a"), col("deg").as("deg_a")), nNodes, 24), "a")
@@ -955,26 +846,15 @@ object ProvidenciasOps {
     // at 10dp so the DECIMAL fold over each pair's common neighbors is
     // order-independent — the text_entropy ln-parity discipline.
     "graph_adamic_adar" -> ((s, dir) => {
-      val tri = SimilarityOps.similarEdges(s, dir)
-        .select(col("src"), col("dst"))
-      val und = tri.select(explode(array(
-          struct(col("src").as("s"), col("dst").as("d")),
-          struct(col("dst").as("s"), col("src").as("d")))).as("e"))
-        .select(col("e.s").as("s"), col("e.d").as("d"))
-        .persist()
+      val und = Graph.undirected(SimilarityOps.similarEdges(s, dir)).persist()
       val w = und.groupBy(col("s").as("m")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= 2)
         .select(col("m"),
           round(lit(1.0) / log(col("deg")), 10).as("w"))
-      und.select(col("s").as("a"), col("d").as("m"))
-        .join(und.select(col("s").as("m"), col("d").as("b")), "m")
-        .filter(col("a") < col("b"))
-        .join(Bcast.ifFitsRows(w,
-          nodeCountMemo.getOrElseUpdate(s, dir)(
-            Tables.embeddings(s, dir).count()), 24), "m")
+      Graph.wedges(und)
+        .join(Bcast.ifFitsRows(w, Graph.nodeCount(s, dir), 24), "m")
         .groupBy("a", "b")
-        .agg(count(lit(1)).as("n_common"),
-          sum(col("w").cast("decimal(28,10)")).cast("double").as("aa_raw"))
+        .agg(count(lit(1)).as("n_common"), Num.dsum(col("w")).as("aa_raw"))
         .select(col("a"), col("b"), col("n_common"),
           round(col("aa_raw"), 6).as("adamic_adar"))
         .filter(col("n_common") >= 3)
@@ -1026,19 +906,15 @@ object ProvidenciasOps {
       val e = SimilarityOps.similarEdges(s, dir)
         .select(col("src"), col("dst"))
         .persist()
-      val deg = e.select(explode(array(col("src"), col("dst"))).as("id"))
-        .groupBy("id").agg(count(lit(1)).as("degree"))
-      val directed = e.select(col("src").as("a"), col("dst").as("b"))
-        .union(e.select(col("dst").as("a"), col("src").as("b")))
-      def dsum(c: Column) = sum(c.cast("decimal(28,10)")).cast("double")
-      directed
+      val deg = Graph.degrees(e)
+      Graph.stubs(e)
         .join(deg.select(col("id").as("a"), col("degree").as("da")), "a")
         .join(deg.select(col("id").as("b"), col("degree").as("db")), "b")
         .agg(count(lit(1)).cast("double").as("m"),
-          dsum(col("da")).as("sa"), dsum(col("db")).as("sb"),
-          dsum(col("da") * col("db")).as("sab"),
-          dsum(col("da") * col("da")).as("saa"),
-          dsum(col("db") * col("db")).as("sbb"))
+          Num.dsum(col("da")).as("sa"), Num.dsum(col("db")).as("sb"),
+          Num.dsum(col("da") * col("db")).as("sab"),
+          Num.dsum(col("da") * col("da")).as("saa"),
+          Num.dsum(col("db") * col("db")).as("sbb"))
         .select((col("m") / 2).cast("long").as("n_edges"),
           round((col("m") * col("sab") - col("sa") * col("sb")) /
             sqrt((col("m") * col("saa") - col("sa") * col("sa")) *
@@ -1058,11 +934,8 @@ object ProvidenciasOps {
       val e = SimilarityOps.similarEdges(s, dir)
         .select(col("src"), col("dst"))
         .persist()
-      val deg = e.select(explode(array(col("src"), col("dst"))).as("id"))
-        .groupBy("id").agg(count(lit(1)).as("degree"))
-      val directed = e.select(col("src").as("a"), col("dst").as("b"))
-        .union(e.select(col("dst").as("a"), col("src").as("b")))
-      directed
+      val deg = Graph.degrees(e)
+      Graph.stubs(e)
         .join(deg.select(col("id").as("a"), col("degree").as("da")), "a")
         .join(deg.select(col("id").as("b"), col("degree").as("db")), "b")
         .groupBy(col("da").as("degree"))
@@ -1084,14 +957,11 @@ object ProvidenciasOps {
     // centralization are over the TRUE vertex set, not just touched
     // nodes. All ratios divide exact integers in a pinned order.
     "graph_summary" -> ((s, dir) => {
-      val e = SimilarityOps.similarEdges(s, dir)
-        .select(col("src"), col("dst"))
       // persisted: both the totals aggregate and the centralization pass
       // consume it — without the pin the O(n²) pairwise subtree runs twice
-      val deg = Tables.embeddings(s, dir).select(col("vec_id").as("id"))
-        .join(e.select(explode(array(col("src"), col("dst"))).as("id"))
-          .groupBy("id").agg(count(lit(1)).as("d")), Seq("id"), "left")
-        .select(col("id"), coalesce(col("d"), lit(0L)).as("d"))
+      val deg = Graph.nodes(s, dir)
+        .join(Graph.degrees(SimilarityOps.similarEdges(s, dir)), Seq("id"), "left")
+        .select(col("id"), coalesce(col("degree"), lit(0L)).as("d"))
         .persist()
       deg.agg(count(lit(1)).as("n_nodes"), sum(col("d")).as("stubs"),
           max(col("d")).as("max_degree"))
@@ -1123,8 +993,7 @@ object ProvidenciasOps {
       val e = SimilarityOps.similarEdges(s, dir)
         .select(col("src"), col("dst"))
         .persist()
-      val deg = e.select(explode(array(col("src"), col("dst"))).as("id"))
-        .groupBy("id").agg(count(lit(1)).as("degree"))
+      val deg = Graph.degrees(e)
       val ed = e
         .join(deg.select(col("id").as("src"), col("degree").as("ds")), "src")
         .join(deg.select(col("id").as("dst"), col("degree").as("dd")), "dst")
@@ -1198,9 +1067,9 @@ object ProvidenciasOps {
     // is a user-keyed shuffle join (users can be billions — never
     // broadcast); the final authority aggregate is |types|-sized.
     "graph_hits" -> ((s, dir) => {
-      // r19 opt (guide §2.4): the deduped (user, type) relation was
+      // Without the re-layout the deduped (user, type) relation is
       // re-exchanged TWICE downstream — h₁'s user groupBy and the final
-      // user join each re-shuffled it. One user_id re-layout right after
+      // user join would each re-shuffle it. One user_id re-layout right after
       // the distinct (over the already-deduped slim relation, so the
       // corpus-scale distinct keeps its map-side combine) makes
       // hashpartitioning(user_id) the relation's visible layout; h₁'s
@@ -1239,17 +1108,10 @@ object ProvidenciasOps {
       val e = SimilarityOps.similarEdges(s, dir)
         .select(col("src"), col("dst"))
         .persist()
-      val stats = e.select(col("src").as("id"))
-        .unionAll(e.select(col("dst").as("id")))
-        .groupBy("id").agg(count(lit(1)).as("d"))
+      val stats = Graph.degrees(e)
         .agg(count(lit(1)).as("n_nodes"),
-          sum(expr("(d * (d - 1)) DIV 2")).as("n_wedges"))
-      val e1 = e.select(col("src").as("a"), col("dst").as("b"))
-      val e2 = e.select(col("src").as("b2"), col("dst").as("c"))
-      val e3 = e.select(col("src").as("a3"), col("dst").as("c3"))
-      val tri = e1.join(e2, col("b") === col("b2"))
-        .join(e3, col("a") === col("a3") && col("c") === col("c3"))
-        .agg(count(lit(1)).as("n_triangles"))
+          sum(expr("(degree * (degree - 1)) DIV 2")).as("n_wedges"))
+      val tri = Graph.triangles(e).agg(count(lit(1)).as("n_triangles"))
       val edges = e.agg(count(lit(1)).as("n_edges"))
       stats.crossJoin(tri).crossJoin(edges)
         .select(col("n_nodes"), col("n_edges"), col("n_wedges"),

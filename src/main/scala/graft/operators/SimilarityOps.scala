@@ -417,7 +417,7 @@ object SimilarityOps {
       // reproducible across engines/retries; a TakeOrdered job. The
       // sample + the driver Lloyd below are a pure function of the
       // immutable fixture, so the trained codebook is memoized per
-      // (session, dir) — r18 opt, the nodeCountMemo / BPE-training-run
+      // (session, dir) — the Graph.nodeCount / BPE-training-run
       // class: un-memoized, every construction re-ran the collect AND
       // the BigDecimal training loop just to rebuild 16×16×4 doubles.
       lazy val sample = e

@@ -100,7 +100,7 @@ object StreamingOps {
   val HwPeriod = 24
 
   /** `ts_spc_rules`' eligible-user count per (session, dir) — see the
-    * usage comment at the key (the ProvidenciasOps.nodeCountMemo twin). */
+    * usage comment at the key (the Graph.nodeCount twin). */
   private val spcUserCountMemo = new SessionMemo[String, java.lang.Long]
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -493,7 +493,7 @@ object StreamingOps {
         .select(col("user_id"),
           (col("sv").cast("double") / col("n")).as("mu"),
           sqrt(varE).as("sigma"))
-      // memoized per (session, dir) like ProvidenciasOps.nodeCountMemo:
+      // memoized per (session, dir) like Graph.nodeCount:
       // the eligible-user count is a pure function of the immutable
       // fixture, and un-memoized it re-ran a corpus-scale aggregation at
       // EVERY construction just to size the broadcast hint (r18 opt)
@@ -870,16 +870,15 @@ object StreamingOps {
     // bounded by users.
     "ts_autocorr" -> ((s, dir) => {
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      def dsum(c: Column) = sum(c.cast("decimal(28,10)")).cast("double")
       Tables.events(s, dir)
         .withColumn("lv", lag(col("value"), 1).over(w))
         .filter(col("lv").isNotNull)
         .groupBy("user_id")
         .agg(count(lit(1)).cast("double").as("n"),
-          dsum(col("value")).as("sv"), dsum(col("lv")).as("sl"),
-          dsum(col("value") * col("lv")).as("svl"),
-          dsum(col("value") * col("value")).as("svv"),
-          dsum(col("lv") * col("lv")).as("sll"))
+          Num.dsum(col("value")).as("sv"), Num.dsum(col("lv")).as("sl"),
+          Num.dsum(col("value") * col("lv")).as("svl"),
+          Num.dsum(col("value") * col("value")).as("svv"),
+          Num.dsum(col("lv") * col("lv")).as("sll"))
         .filter(col("n") >= 10 &&
           col("n") * col("svv") - col("sv") * col("sv") > 0 &&
           col("n") * col("sll") - col("sl") * col("sl") > 0)
@@ -900,7 +899,6 @@ object StreamingOps {
     // (hour counts are integers, so DECIMAL casts are exact and the result
     // is bit-stable without rounding tricks).
     "ts_cross_corr" -> ((s, dir) => {
-      def dsum(c: Column) = sum(c.cast("decimal(28,10)")).cast("double")
       Tables.events(s, dir)
         .filter(col("event_type").isin("click", "view"))
         .groupBy(date_trunc("hour", col("ts")).as("h"))
@@ -910,10 +908,10 @@ object StreamingOps {
           sum(when(col("event_type") === "view", 1L).otherwise(0L))
             .cast("double").as("b"))
         .agg(count(lit(1)).cast("double").as("n"),
-          dsum(col("a")).as("sa"), dsum(col("b")).as("sb"),
-          dsum(col("a") * col("b")).as("sab"),
-          dsum(col("a") * col("a")).as("saa"),
-          dsum(col("b") * col("b")).as("sbb"))
+          Num.dsum(col("a")).as("sa"), Num.dsum(col("b")).as("sb"),
+          Num.dsum(col("a") * col("b")).as("sab"),
+          Num.dsum(col("a") * col("a")).as("saa"),
+          Num.dsum(col("b") * col("b")).as("sbb"))
         .select(col("n").cast("long").as("n_hours"),
           Num.pin((col("n") * col("sab") - col("sa") * col("sb")) /
             sqrt((col("n") * col("saa") - col("sa") * col("sa")) *
@@ -1227,22 +1225,16 @@ object StreamingOps {
         df.withColumn(s"l$k", lag(col("y"), k).over(w))
       }
       val arms = (1 to CorrelogramLags).map(k => s"$k, l$k").mkString(", ")
-      def dsum(c: Column) = sum(c.cast("decimal(28,10)")).cast("double")
-      // count products fold as DECIMAL(19,0)×DECIMAL(19,0) → (38,0), never
-      // LONG: y·ylag in BIGINT would overflow once hourly counts pass ~3e9
-      // (the exact-integer-fold claim would silently break at corpus scale)
-      def psum(a: Column, b: Column) =
-        sum(a.cast("decimal(19,0)") * b.cast("decimal(19,0)")).cast("double")
       lagged
         .select(col("y"), expr(
           s"stack($CorrelogramLags, $arms) AS (lag, ylag)"))
         .filter(col("ylag").isNotNull)
         .groupBy("lag")
         .agg(count(lit(1)).cast("double").as("n"),
-          dsum(col("y")).as("sv"), dsum(col("ylag")).as("sl"),
-          psum(col("y"), col("ylag")).as("svl"),
-          psum(col("y"), col("y")).as("svv"),
-          psum(col("ylag"), col("ylag")).as("sll"))
+          Num.dsum(col("y")).as("sv"), Num.dsum(col("ylag")).as("sl"),
+          Num.psum(col("y"), col("ylag")).as("svl"),
+          Num.psum(col("y"), col("y")).as("svv"),
+          Num.psum(col("ylag"), col("ylag")).as("sll"))
         .select(col("lag"), col("n").cast("long").as("n_pairs"),
           Num.pin((col("n") * col("svl") - col("sv") * col("sl")) /
             sqrt((col("n") * col("svv") - col("sv") * col("sv")) *

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.Num
 
 /** Text-analysis suite (SURVEY.md §2 B1 + north-star text ops): token
   * frequencies, ranked search, per-facet stats, language-ID heuristic,
@@ -310,7 +311,6 @@ object TextOps {
     }),
 
     "text_zipf" -> ((s, dir) => {
-      def dsum(c: Column) = sum(c.cast("decimal(28,10)")).cast("double")
       val nParts = s.conf.get("spark.sql.shuffle.partitions").toInt
       // persisted: pid feeds both the offsets table and the rank join,
       // and range boundaries come from sampling — recomputation across
@@ -337,10 +337,10 @@ object TextOps {
       ranked
         .select(log(col("rank")).as("lx"), log(col("cnt")).as("ly"))
         .agg(count(lit(1)).cast("double").as("n"),
-          dsum(col("lx")).as("sx"), dsum(col("ly")).as("sy"),
-          dsum(col("lx") * col("ly")).as("sxy"),
-          dsum(col("lx") * col("lx")).as("sxx"),
-          dsum(col("ly") * col("ly")).as("syy"))
+          Num.dsum(col("lx")).as("sx"), Num.dsum(col("ly")).as("sy"),
+          Num.dsum(col("lx") * col("ly")).as("sxy"),
+          Num.dsum(col("lx") * col("lx")).as("sxx"),
+          Num.dsum(col("ly") * col("ly")).as("syy"))
         .withColumn("slope", round(
           (col("n") * col("sxy") - col("sx") * col("sy")) /
             (col("n") * col("sxx") - col("sx") * col("sx")), 6))

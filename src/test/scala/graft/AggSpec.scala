@@ -625,6 +625,34 @@ class AggSpec extends SparkSpec {
     }
   }
 
+  test("agg_lorenz equals a driver-side replay of the decile cumsums") {
+    // the bucketed plan must put every distinct value in the decile the
+    // plain global cumsum puts it in (tie blocks never split)
+    val got = AggOps.queries("agg_lorenz")(spark, SfDir).collect().toSeq
+    val byVal = Tables.orders(spark, SfDir).select(col("o_totalprice"))
+      .collect().map(_.getDouble(0)).groupBy(identity)
+      .map { case (v, vs) => v -> vs.length.toLong }.toSeq.sortBy(_._1)
+    val nt = byVal.map(_._2).sum
+    var cb = 0L
+    var cv = BigDecimal(0)
+    val cells = byVal.map { case (v, c) =>
+      cb += c
+      cv += BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP) * c
+      (math.min(9L, (10 * cb + nt - 1) / nt - 1), c, cb, cv)
+    }
+    val want = cells.groupBy(_._1).toSeq.sortBy(_._1).map { case (d, cs) =>
+      (d, cs.map(_._2).sum, cs.map(_._3).max, cs.map(_._4).max)
+    }
+    def pin6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
+    assert(got.map(_.getAs[Long]("decile")) === want.map(_._1))
+    got.zip(want).foreach { case (r, (d, n, cumN, cumV)) =>
+      assert(r.getAs[Long]("n_orders") === n, s"decile $d")
+      assert(r.getAs[Double]("cum_pop_share") === pin6(cumN.toDouble / nt), s"decile $d")
+      assert(math.abs(r.getAs[Double]("cum_value_share") -
+        pin6((cumV / cv).toDouble)) <= 1.5e-6, s"decile $d")
+    }
+  }
+
   test("agg_bloom_members: zero false negatives at the declared geometry; " +
       "a saturated 2-word filter keeps zero FNs and MUST false-positive") {
     def noFalseNegatives(rows: Array[org.apache.spark.sql.Row]): Unit =

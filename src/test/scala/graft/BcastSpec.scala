@@ -65,47 +65,9 @@ class BcastSpec extends SparkSpec {
 
   test("vocabHinted measures a plan once per session — repeat " +
       "invocations skip the stats job") {
-    // The r9 Bcast size measurements roughly doubled the warm time of
-    // every vocabulary-hinted query (one persist + one aggregation job
-    // per invocation); r10 memoizes the measured bytes per (session,
-    // semanticHash). Pin the elision by counting Spark jobs around two
-    // invocations of the SAME plan.
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // Bcast memoizes the measured bytes per (session, semanticHash):
+    // count Spark jobs around two invocations of the SAME plan.
     import org.apache.spark.sql.functions._
-    val counter = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
-    // Listener events are async to the jobs that produce them, so fixed
-    // sleeps flake on a loaded host (an event from the previous window
-    // can arrive after a counter reset). Instead wait until the counter
-    // has been stable for ~600 ms (3 consecutive unchanged reads),
-    // capped at 10 s. Returns whether STABILITY was reached: if the cap
-    // expires with events still churning, a late first-invocation event
-    // could land in the repeat window and read as a false memo miss —
-    // that run must CANCEL (host too loaded to measure), not fail (r11).
-    def settle(): Boolean = {
-      var prev = -1; var stable = 0
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (stable < 3 && System.nanoTime() < deadline) {
-        val c = counter.get()
-        if (c == prev) stable += 1 else { stable = 0; prev = c }
-        Thread.sleep(200)
-      }
-      stable >= 3
-    }
-    def jobsDuring(body: => Unit): Int = {
-      spark.sparkContext.addSparkListener(l)
-      try {
-        assume(settle(), "listener events never settled — host too loaded to measure")
-        counter.set(0)
-        body
-        assume(settle(), "listener events never settled — host too loaded to measure")
-        counter.get()
-      } finally spark.sparkContext.removeSparkListener(l)
-    }
     def vocab() = spark.range(1000)
       .selectExpr("id % 37 AS tok", "'r10-memo-probe' AS tag")
       .groupBy("tok", "tag").agg(count(lit(1)).as("df"))

@@ -68,43 +68,8 @@ class GraphSpec extends SparkSpec {
   test("second centrality consumer launches no edge-symmetrization or " +
       "BFS job — the edge table lives inside the pivot-BFS memo") {
     // Both pivot-BFS tables (edges + levels) materialize once under the
-    // memoized scratch root, so a memo hit must launch no job. Counting
-    // is stability-settled; an unsettleable host must CANCEL, not fail.
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // memoized scratch root, so a memo hit must launch no job.
     import graft.operators.{ProvidenciasOps => P, SimilarityOps}
-    val counter = new java.util.concurrent.atomic.AtomicInteger
-    // count ONLY jobs carrying the probe's job group, so a stray async
-    // job from another suite can never fail repeat === 0
-    val probeGroup = "graft-memo-probe"
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        if (js.properties != null &&
-            probeGroup == js.properties.getProperty("spark.jobGroup.id"))
-          counter.incrementAndGet()
-        ()
-      }
-    }
-    def settle(): Boolean = {
-      var prev = -1; var stable = 0
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (stable < 3 && System.nanoTime() < deadline) {
-        val c = counter.get()
-        if (c == prev) stable += 1 else { stable = 0; prev = c }
-        Thread.sleep(200)
-      }
-      stable >= 3
-    }
-    def jobsDuring(body: => Unit): Int = {
-      spark.sparkContext.addSparkListener(l)
-      try {
-        assume(settle(), "listener events never settled — host too loaded to measure")
-        counter.set(0)
-        spark.sparkContext.setJobGroup(probeGroup, "memo-hit job probe")
-        try body finally spark.sparkContext.clearJobGroup()
-        assume(settle(), "listener events never settled — host too loaded to measure")
-        counter.get()
-      } finally spark.sparkContext.removeSparkListener(l)
-    }
     SimilarityOps.evictSharedEdges(spark)
     val first = jobsDuring { P.pivotBfs(spark, SfDir); () }
     val repeat = jobsDuring { P.pivotBfs(spark, SfDir); () }
@@ -345,6 +310,78 @@ class GraphSpec extends SparkSpec {
     assert(joined.filter(col("core_degree") > col("degree")).count() === 0)
     assert(joined.filter(col("degree") < k).count() === 0)
     joined.unpersist(); kc.unpersist()
+  }
+
+  test("the shared graph relations give exact values on K4 + a pendant " +
+      "vertex + an isolated node") {
+    import graft.operators.Graph
+    import spark.implicits._
+    // K4 on 0..3, pendant 4 hanging off 3, node 5 isolated
+    val e = Seq((0L, 1L), (0L, 2L), (0L, 3L), (1L, 2L), (1L, 3L), (2L, 3L),
+      (3L, 4L)).toDF("src", "dst")
+    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Long]] =
+      df.collect().map(_.toSeq.map(_.asInstanceOf[Long])).toSet
+    val und = Graph.undirected(e)
+    val pairs = Set((0L, 1L), (0L, 2L), (0L, 3L), (1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L))
+    assert(und.count() === 14)
+    assert(rows(und) === pairs.flatMap { case (a, b) => Set(Seq(a, b), Seq(b, a)) })
+    assert(rows(Graph.stubs(e)) === rows(und))
+    assert(rows(Graph.degrees(e)) ===
+      Set(Seq(0L, 3L), Seq(1L, 3L), Seq(2L, 3L), Seq(3L, 4L), Seq(4L, 1L)))
+    assert(rows(Graph.triangles(e)) ===
+      Set(Seq(0L, 1L, 2L), Seq(0L, 1L, 3L), Seq(0L, 2L, 3L), Seq(1L, 2L, 3L)))
+    assert(rows(Graph.triangleCounts(e)) === (0L to 3L).map(i => Seq(i, 3L)).toSet)
+    // common neighbours: 2 for every K4 pair, 1 (node 3) for the pendant
+    // with 0, 1 and 2, none for the edge 3–4 itself
+    assert(rows(Graph.wedges(und).groupBy("a", "b").count()) ===
+      pairs.filter(_._2 < 4).map { case (a, b) => Seq(a, b, 2L) } ++
+        (0L to 2L).map(a => Seq(a, 4L, 1L)))
+    val nodes = (0L to 5L).toDF("gid")
+    val ccEdges = Graph.componentEdges(e, nodes).persist()
+    assert(rows(Graph.components(ccEdges, nodes)) ===
+      ((0L to 4L).map(i => Seq(i, 0L)) :+ Seq(5L, 5L)).toSet)
+    ccEdges.unpersist()
+    // 3-core by peeling: the start set (degree >= 3) is already the K4,
+    // so one round reaches the fixpoint; a spent round budget runs none
+    def core(keep: org.apache.spark.sql.DataFrame) =
+      und.join(keep, und("s") === keep("id"), "left_semi")
+        .join(keep, und("d") === keep("id"), "left_semi")
+        .groupBy("s").count().filter(col("count") >= 3).select(col("s").as("id"))
+    val start = Graph.degrees(e).filter(col("degree") >= 3).select("id")
+      .localCheckpoint()
+    val (k3, n, converged) = Graph.peel(start, 0, 64)((k, _) => core(k))
+    assert(converged && n === 4)
+    assert(rows(k3) === (0L to 3L).map(Seq(_)).toSet)
+    val (same, n0, converged0) = Graph.peel(start, 64, 64)((k, _) => core(k))
+    assert(!converged0 && n0 === 4 && (same eq start))
+  }
+
+  test("spark.graft.edgePartitions sets the edge-list coalesce of " +
+      "graph_components, graph_kcore and graph_pagerank") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // graph_components checkpoints its labels, so its final plan no
+    // longer shows the edge list: watch every plan the key executes
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, ex: Exception): Unit = ()
+    }
+    withConfs(ProvidenciasOps.EdgePartitionsKey -> "3") {
+      for (k <- Seq("graph_components", "graph_kcore", "graph_pagerank")) {
+        plans.clear()
+        spark.listenerManager.register(l)
+        try {
+          q(k).collect()
+          // listener events arrive asynchronously
+          val deadline = System.nanoTime() + 10_000_000_000L
+          def found = plans.toArray.exists(_.toString.contains("Coalesce 3"))
+          while (!found && System.nanoTime() < deadline) Thread.sleep(100)
+          assert(found, s"$k planned no Coalesce 3")
+        } finally spark.listenerManager.unregister(l)
+      }
+    }
   }
 
   test("graph_components labels both endpoints of every edge identically") {

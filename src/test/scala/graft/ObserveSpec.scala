@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.CollectMetricsExec
 import org.apache.spark.sql.functions._
 
@@ -28,30 +25,6 @@ import graft.operators.PipelineOps
   *     refresh must not re-run the corpus pass).
   */
 class ObserveSpec extends SparkSpec {
-
-  /** Count job starts on the shared SparkContext while `body` runs.
-    * Listener events post asynchronously; poll until the counter is
-    * stable so a late-arriving start event cannot leak past the
-    * assertion window. */
-  private def countJobs(body: => Unit): Int = {
-    val n = new AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var last = -1
-      var stableMs = 0
-      while (stableMs < 300) {
-        Thread.sleep(50)
-        val cur = n.get()
-        if (cur == last) stableMs += 50 else { last = cur; stableMs = 0 }
-      }
-    } finally spark.sparkContext.removeSparkListener(l)
-    n.get()
-  }
 
   test("observed gate: CollectMetricsExec below the survivor filter, " +
       "output pruned to survivor columns") {
@@ -101,7 +74,7 @@ class ObserveSpec extends SparkSpec {
     // part of the curation pass being pinned.
     val s2 = spark.newSession()
     Tables.documents(s2, SfDir).schema
-    val jobs = countJobs { PipelineOps.observeGateMetrics(s2, SfDir) }
+    val jobs = jobsDuring { PipelineOps.observeGateMetrics(s2, SfDir) }
     assert(jobs == 1,
       s"the observed curation pass must be ONE job (scan->filter->noop " +
         s"write, no shuffle, metrics as sideband accumulators); saw $jobs")
@@ -111,7 +84,7 @@ class ObserveSpec extends SparkSpec {
       "pass schedules zero jobs") {
     // warm the memo on the suite session (no assertion on this one)
     SparkEntry.queries("pipe_observe_metrics")(spark, SfDir)
-    val jobs = countJobs {
+    val jobs = jobsDuring {
       SparkEntry.queries("pipe_observe_metrics")(spark, SfDir)
     }
     assert(jobs == 0,

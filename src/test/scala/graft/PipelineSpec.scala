@@ -27,38 +27,8 @@ class PipelineSpec extends SparkSpec {
 
   test("bpeLearn trains once per session — a second consumer triggers " +
       "no new training jobs") {
-    // r13 verdict item 1: pipe_bpe_train/encode/fertility each re-ran the
-    // 16-round training loop. The trained merge list is now memoized per
-    // (session, dir); pin the elision with the BcastSpec listener-count
-    // discipline (stability-settled job counting — fixed sleeps flake on
-    // a loaded host; an unsettleable host must CANCEL, not fail).
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val counter = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
-    def settle(): Boolean = {
-      var prev = -1; var stable = 0
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (stable < 3 && System.nanoTime() < deadline) {
-        val c = counter.get()
-        if (c == prev) stable += 1 else { stable = 0; prev = c }
-        Thread.sleep(200)
-      }
-      stable >= 3
-    }
-    def jobsDuring(body: => Unit): Int = {
-      spark.sparkContext.addSparkListener(l)
-      try {
-        assume(settle(), "listener events never settled — host too loaded to measure")
-        counter.set(0)
-        body
-        assume(settle(), "listener events never settled — host too loaded to measure")
-        counter.get()
-      } finally spark.sparkContext.removeSparkListener(l)
-    }
+    // pipe_bpe_train/encode/fertility share one trained merge list,
+    // memoized per (session, dir)
     PipelineOps.evictBpe(spark)
     val first = jobsDuring { PipelineOps.bpeLearn(spark, SfDir); () }
     // bpeLearn's return is LAZY (rules from the memo, vocabulary a

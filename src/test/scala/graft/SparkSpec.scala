@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -37,6 +40,43 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       SparkSession.setDefaultSession(spark0)
       SparkSession.setActiveSession(spark0)
     }
+  }
+
+  /** Spark jobs started while `body` runs. Only jobs in this call's job
+    * group count, so a stray async job from another suite never does.
+    * Listener events arrive asynchronously, so before and after `body`
+    * the count waits until it reads the same on 3 polls 200 ms apart (at
+    * most 10 s); a host too loaded to settle cancels the test instead of
+    * failing it. */
+  def jobsDuring(body: => Unit): Int = {
+    val group = "graft-job-probe"
+    val counter = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            group == js.properties.getProperty("spark.jobGroup.id"))
+          counter.incrementAndGet()
+    }
+    def settle(): Unit = {
+      var prev = -1; var stable = 0
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (stable < 3 && System.nanoTime() < deadline) {
+        val c = counter.get()
+        if (c == prev) stable += 1 else { stable = 0; prev = c }
+        Thread.sleep(200)
+      }
+      assume(stable >= 3, "listener events never settled — host too loaded to measure")
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      settle()
+      counter.set(0)
+      sc.setJobGroup(group, "job probe")
+      try body finally sc.clearJobGroup()
+      settle()
+      counter.get()
+    } finally sc.removeSparkListener(l)
   }
 
   override def afterAll(): Unit = super.afterAll()
